@@ -16,10 +16,8 @@ every round's frontier fully serialized) at decade lengths and records:
 - wall: end-to-end _cc_pointer_doubling + a full label collect;
 - labels_ok: every node resolved to the single component min (0).
 
-Plus the same chain through the OLD one-hop loop (neardup_clusters with
-an explicit diameter-sized budget) for the linear-vs-log comparison —
-at chain 1000 the old loop's 999 rounds are prohibitive, so the old
-form is only timed up to the length where a run stays under ~2 min.
+The retired one-hop loop's linear-vs-log comparison numbers stay in
+SCALE.md r16.
 
 Besides chains, a DENSE decade runs blob graphs (k near-dup clusters
 of m docs each with full intra-cluster pair sets — the shape real dup
@@ -39,8 +37,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession  # noqa: E402
 
-OLD_FORM_MAX_CHAIN = 100  # 999 one-hop rounds would run for many minutes
-
 
 def main() -> None:
     lens = [int(a) for a in sys.argv[1:]] or [10, 100, 1000]
@@ -51,12 +47,9 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    from tranquility_spark.operators.dedup import (
-        _cc_pointer_doubling,
-        neardup_clusters,
-    )
+    from tranquility_spark.operators.dedup import _cc_pointer_doubling
 
-    print("chain_len | doubling_rounds | doubling_wall_s | old_onehop_wall_s")
+    print("chain_len | doubling_rounds | doubling_wall_s")
     for n in lens:
         pairs = spark.createDataFrame(
             [(i, i + 1) for i in range(n - 1)], "id_a bigint, id_b bigint"
@@ -67,19 +60,7 @@ def main() -> None:
         got = {r.cluster_id for r in labels.collect()}
         wall = time.time() - t0
         assert got == {0}, f"chain {n}: wrong labels {sorted(got)[:5]}"
-
-        old_wall = None
-        if n <= OLD_FORM_MAX_CHAIN:
-            t0 = time.time()
-            old = neardup_clusters(pairs, max_iterations=n)
-            old_got = {r.cluster_id for r in old.collect()}
-            old_wall = time.time() - t0
-            assert old_got == {0}, f"old form chain {n}: wrong labels"
-
-        print(
-            f"{n:9d} | {rounds:15d} | {wall:15.2f} | "
-            + (f"{old_wall:.2f}" if old_wall is not None else "skipped (linear rounds)")
-        )
+        print(f"{n:9d} | {rounds:15d} | {wall:15.2f}")
 
     print("\ndense blob decade (k clusters x m docs, full intra-cluster pair sets)")
     print("clusters x size | edges | doubling_rounds | wall_s")

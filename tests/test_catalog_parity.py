@@ -19,9 +19,16 @@ def oracles():
 
 @pytest.mark.parametrize("name", CATALOG_NAMES)
 def test_catalog_entry(name, spark, duck, sf_dir, oracles):
+    import os
     import sys
 
-    sys.path.insert(0, "/root/repo/scripts")
+    sys.path.insert(
+        0,
+        os.path.join(
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            "scripts",
+        ),
+    )
     from check_parity import compare
 
     sdf = ent.queries()[name](spark, sf_dir).toPandas()

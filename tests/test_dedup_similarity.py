@@ -201,27 +201,25 @@ def test_ivf_centroids_null_elements_guard(spark):
     assert cents[0][2] is None
 
 
-def test_neardup_clusters_and_survivors(spark):
-    from tranquility_spark.operators.dedup import neardup_clusters, neardup_survivors
+def test_neardup_survivors_converged_components(spark):
+    from tranquility_spark.operators.dedup import (
+        _cc_pointer_doubling,
+        neardup_survivors_converged,
+    )
 
     # components: {1,2,3} (chain), {7,9}; 5 untouched
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (7, 9)], "id_a long, id_b long"
     )
-    labels = {r.id: r.cluster_id for r in neardup_clusters(pairs).collect()}
+    labels, _, _ = _cc_pointer_doubling(pairs)
+    labels = {r.id: r.cluster_id for r in labels.collect()}
     assert labels == {1: 1, 2: 1, 3: 1, 7: 7, 9: 7}
 
     docs = spark.createDataFrame([(i, f"d{i}") for i in (1, 2, 3, 5, 7, 9)], "doc_id long, text string")
-    kept = sorted(r.doc_id for r in neardup_survivors(docs, pairs).collect())
+    kept = sorted(
+        r.doc_id for r in neardup_survivors_converged(docs, pairs).collect()
+    )
     assert kept == [1, 5, 7]
-
-
-def test_neardup_clusters_long_chain_converges(spark):
-    from tranquility_spark.operators.dedup import neardup_clusters
-
-    chain = spark.createDataFrame([(i, i + 1) for i in range(8)], "id_a long, id_b long")
-    labels = {r.id: r.cluster_id for r in neardup_clusters(chain).collect()}
-    assert set(labels.values()) == {0}
 
 
 def test_corpus_pipeline_monotone_and_deterministic(spark, sf_dir):
@@ -1848,46 +1846,31 @@ def test_neardup_survivors_converged_long_chain(spark):
     assert {r.cluster_id for r in labels.collect()} == {0}
     assert rounds <= 4  # 14 hops: ceil(log4(14)) + O(1), not 14
 
-
-def test_cc_alternating_star_matches_pointer_doubling(spark):
-    """r17 study arm: the alternating large-star/small-star CC
-    (Kiveris et al. SoCC'14 — the GraphFrames family) must produce the
-    SAME min-label components as the production pointer-doubling form
-    on every topology shape the comparison probe measures — chain,
-    multi-component, clique-with-tail, high-degree star, duplicate and
-    reversed edges. The probe (scripts/run_cc_compare_probe.py)
-    measured pointer doubling faster on all five large topologies
-    (SCALE.md r17); this test keeps the study arm CORRECT so a future
-    re-measurement stays apples-to-apples."""
-    from tranquility_spark.operators.dedup import (
-        _cc_alternating_star,
-        _cc_pointer_doubling,
-    )
-
+    # min labels on the topology shapes the r17 CC comparison measured
+    # (SCALE.md r17): chain, multi-component, clique-with-tail,
+    # high-degree star, duplicate and reversed edges
     cases = {
-        "chain": [(i, i + 1) for i in range(9)],
-        "two_comps": [(0, 1), (1, 2), (5, 6), (6, 7), (7, 8)],
-        "clique_tail": [(3, 4), (4, 5), (3, 5), (5, 6), (6, 7)],
-        "star": [(0, i) for i in range(1, 20)],
-        "dup_and_reversed": [(1, 2), (2, 1), (1, 2), (9, 8)],
+        "chain": ([(i, i + 1) for i in range(9)], {i: 0 for i in range(10)}),
+        "two_comps": (
+            [(0, 1), (1, 2), (5, 6), (6, 7), (7, 8)],
+            {0: 0, 1: 0, 2: 0, 5: 5, 6: 5, 7: 5, 8: 5},
+        ),
+        "clique_tail": (
+            [(3, 4), (4, 5), (3, 5), (5, 6), (6, 7)],
+            {i: 3 for i in range(3, 8)},
+        ),
+        "star": ([(0, i) for i in range(1, 20)], {i: 0 for i in range(20)}),
+        "dup_and_reversed": (
+            [(1, 2), (2, 1), (1, 2), (9, 8)],
+            {1: 1, 2: 1, 8: 8, 9: 8},
+        ),
     }
-    for name, es in cases.items():
-        pairs = spark.createDataFrame(es, "id_a bigint, id_b bigint")
-        star_labels, star_rounds = _cc_alternating_star(pairs)
-        pd_labels, _, _ = _cc_pointer_doubling(pairs)
-        got = {r.id: r.cluster_id for r in star_labels.collect()}
-        want = {r.id: r.cluster_id for r in pd_labels.collect()}
-        assert got == want, f"{name}: {got} != {want}"
-        assert star_rounds >= 1
-
-    # exact-or-loud (r17 review): an exhausted round budget must RAISE,
-    # never return a non-star edge set whose labels frame silently maps
-    # one node to several cluster_ids
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(30)], "id_a bigint, id_b bigint"
-    )
-    with pytest.raises(RuntimeError, match="fixpoint"):
-        _cc_alternating_star(chain, max_rounds=1)
+    for name, (es, want) in cases.items():
+        labels, _, proven = _cc_pointer_doubling(
+            spark.createDataFrame(es, "id_a bigint, id_b bigint")
+        )
+        got = {r.id: r.cluster_id for r in labels.collect()}
+        assert got == want and proven, f"{name}: {got}"
 
 
 def test_hamming_banding_rejects_non_64bit_digest(spark):

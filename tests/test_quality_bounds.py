@@ -130,15 +130,14 @@ def test_dd7_survivors_are_fixed_point(spark, sf_dir):
     corpus."""
     docs = load_table(spark, sf_dir, "documents")
     pairs = dd.minhash_lsh_pairs(docs, "text", "doc_id")
-    survivors = dd.neardup_survivors(docs, pairs, "doc_id")
+    survivors = dd.neardup_survivors_converged(docs, pairs, "doc_id")
     n_docs, n_surv = docs.count(), survivors.count()
-    n_victims = (
-        dd.neardup_clusters(pairs).filter(F.col("id") != F.col("cluster_id")).count()
-    )
+    labels, _, _ = dd._cc_pointer_doubling(pairs)
+    n_victims = labels.filter(F.col("id") != F.col("cluster_id")).count()
     assert n_surv == n_docs - n_victims  # partition: survivors + victims
 
     pairs2 = dd.minhash_lsh_pairs(survivors, "text", "doc_id")
-    survivors2 = dd.neardup_survivors(survivors, pairs2, "doc_id")
+    survivors2 = dd.neardup_survivors_converged(survivors, pairs2, "doc_id")
     assert survivors2.count() == n_surv  # fixed point: nothing left to merge
 
 
@@ -146,7 +145,11 @@ def test_pipe1_stage_counts_reconcile(spark, sf_dir):
     """pipe1: the composed pipeline's per-language outputs reconcile with the
     stages applied individually — totals match the survivor/sample chain and
     packing respects the 4096-token bin capacity."""
-    from tranquility_spark.operators.dedup import exact_dedup, minhash_lsh_pairs, neardup_survivors
+    from tranquility_spark.operators.dedup import (
+        exact_dedup,
+        minhash_lsh_pairs,
+        neardup_survivors_converged,
+    )
     from tranquility_spark.operators.text import hash_sample, quality_filter
 
     out = {r["lang"]: r for r in CATALOG["pipe1_corpus_pipeline"].fn(spark, sf_dir).collect()}
@@ -158,7 +161,9 @@ def test_pipe1_stage_counts_reconcile(spark, sf_dir):
         F.col("keep_doc_id").alias("doc_id")
     )
     kept = kept.join(survivors_exact, "doc_id")
-    kept = neardup_survivors(kept, minhash_lsh_pairs(kept, "text", "doc_id"), "doc_id")
+    kept = neardup_survivors_converged(
+        kept, minhash_lsh_pairs(kept, "text", "doc_id"), "doc_id"
+    )
     train = hash_sample(kept, "doc_id", 80)
     expected = {
         r["lang"]: (r["n"], r["toks"])

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tranquility_spark.catalog import _t, register
+from tranquility_spark.operators.admission import admission_decisions
 from tranquility_spark.operators.partitioning import portable_shard_sql
 from tranquility_spark.operators import dedup as dd
 from tranquility_spark.operators import multimodal as mm
@@ -3673,17 +3674,18 @@ def txt7_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dd7_neardup_survivors",
     None,  # pairs derive from the hash-defined MinHash index — rows-only;
            # the clustering algorithm itself is exactly verified in unit tests
-    doc="Terminal dedup step: LSH pairs → connected components (iterative "
-    "min-label propagation, lineage-checkpointed per round) → keep min-id "
-    "per cluster. Converges in ~diameter rounds; dup families are tiny so "
-    "2-3 in practice",
+    doc="Terminal dedup step: LSH pairs → connected components (pointer-"
+    "doubling hook + jump, lineage-checkpointed per round, fixpoint "
+    "verified — exact or loud) → keep min-id per cluster. Converges in "
+    "~log4(diameter) rounds; dup families are tiny so the one-hop init "
+    "is usually already the fixpoint",
 )
 def dd7_neardup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tranquility_spark.operators.dedup import neardup_survivors
-
     docs = _t(spark, sf_dir, "documents")
     pairs = dd.minhash_lsh_pairs(docs, "text", "doc_id")
-    return neardup_survivors(docs, pairs, "doc_id").select("doc_id")
+    return dd.neardup_survivors_converged(docs, pairs, "doc_id").select(
+        "doc_id"
+    )
 
 
 @register(
@@ -3714,19 +3716,19 @@ def dd7_neardup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     "measured row",
 )
 def dd7b_survivor_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tranquility_spark.operators.dedup import neardup_survivors
-
     docs = _t(spark, sf_dir, "documents")
     ids = docs.select("doc_id")
     pairs = dd.minhash_lsh_pairs(docs, "text", "doc_id").select(
         "id_a", "id_b"
     ).localCheckpoint(eager=False)
     surv = (
-        neardup_survivors(docs, pairs, "doc_id")
+        dd.neardup_survivors_converged(docs, pairs, "doc_id")
         .select("doc_id")
         .localCheckpoint(eager=False)
     )
-    surv2 = neardup_survivors(docs, pairs, "doc_id").select("doc_id")
+    surv2 = dd.neardup_survivors_converged(docs, pairs, "doc_id").select(
+        "doc_id"
+    )
     dropped = ids.join(surv, "doc_id", "left_anti")
 
     n_docs = ids.agg(F.count(F.lit(1)).alias("__nd"))
@@ -3816,7 +3818,11 @@ def _pipe1_stats(spark: SparkSession, sf_dir: str, barrier: bool = False) -> Dat
     pipe1b plan-shape-invariance probe). ``barrier=True`` cuts the logical
     plan after every stage with a lazy localCheckpoint, forcing staged
     evaluation — the probe compares it against the fused single-plan run."""
-    from tranquility_spark.operators.dedup import exact_dedup, minhash_lsh_pairs, neardup_survivors
+    from tranquility_spark.operators.dedup import (
+        exact_dedup,
+        minhash_lsh_pairs,
+        neardup_survivors_converged,
+    )
     from tranquility_spark.operators.text import hash_sample, pack_sequences, quality_filter
 
     def _b(df: DataFrame) -> DataFrame:
@@ -3836,7 +3842,7 @@ def _pipe1_stats(spark: SparkSession, sf_dir: str, barrier: bool = False) -> Dat
 
     # 3. near-dup survivors (LSH pairs → components → min-id per cluster)
     pairs = minhash_lsh_pairs(kept, "text", "doc_id")
-    kept = _b(neardup_survivors(kept, pairs, "doc_id"))
+    kept = _b(neardup_survivors_converged(kept, pairs, "doc_id"))
 
     # 4. reproducible 80% train split
     train = _b(hash_sample(kept, "doc_id", 80))
@@ -5697,46 +5703,55 @@ def _pipe8_decide(
     # without blocking, so extraction k+1's bucket-join stages (which a
     # lazy localCheckpoint executes at call time under AQE) back-fill the
     # cores while gate k's serial CC bookkeeping holds the driver.
-    # eager=False semantics are exactly the old serial form's; job
-    # descriptions are thread-local (the builders-in-pool precedent).
+    # eager=False semantics are exactly the old serial form's. Job
+    # descriptions are thread-local and pool threads are reused, so each
+    # task sets its own and restores the thread's previous one.
     from concurrent.futures import ThreadPoolExecutor
 
     def _submit_ckpt(fam, df):
-        spark.sparkContext.setJobDescription(f"pipe8: {fam} pairs")
-        return df.localCheckpoint(eager=False)
+        sc = spark.sparkContext
+        prev = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(f"pipe8: {fam} pairs")
+        try:
+            return df.localCheckpoint(eager=False)
+        finally:
+            sc.setJobDescription(prev)
 
-    _pool = ThreadPoolExecutor(max_workers=len(fam_pairs))
-    _futs = {
-        fam: _pool.submit(_submit_ckpt, fam, df)
-        for fam, df in fam_pairs.items()
-    }
     victims = {"exact": exact_victims}
-    _fam_order = list(fam_pairs)
-    fam_pairs = {}
-    for fam in _fam_order:
-        # resolve THIS gate's extraction only, inside the gate loop:
-        # later families' stages keep materializing in their pool
-        # threads while this gate's serial CC bookkeeping holds the
-        # driver — the back-fill §2.6 describes
-        pairs = _futs[fam].result()
-        fam_pairs[fam] = pairs
-        restricted = (
-            pairs.join(
-                cur.select(F.col("doc_id").alias("id_a")), "id_a", "left_semi"
+    # the with block shuts the pool down on the error path too
+    with ThreadPoolExecutor(max_workers=len(fam_pairs)) as pool:
+        futs = {
+            fam: pool.submit(_submit_ckpt, fam, df)
+            for fam, df in fam_pairs.items()
+        }
+        fam_pairs = {}
+        for fam, fut in futs.items():
+            # resolve THIS gate's extraction only, inside the gate loop:
+            # later families' stages keep materializing in their pool
+            # threads while this gate's serial CC bookkeeping holds the
+            # driver — the back-fill §2.6 describes
+            pairs = fut.result()
+            fam_pairs[fam] = pairs
+            restricted = (
+                pairs.join(
+                    cur.select(F.col("doc_id").alias("id_a")),
+                    "id_a",
+                    "left_semi",
+                )
+                .join(
+                    cur.select(F.col("doc_id").alias("id_b")),
+                    "id_b",
+                    "left_semi",
+                )
+                .localCheckpoint(eager=False)
             )
-            .join(
-                cur.select(F.col("doc_id").alias("id_b")), "id_b", "left_semi"
-            )
-            .localCheckpoint(eager=False)
-        )
-        nxt = dd.neardup_survivors_converged(cur, restricted).localCheckpoint(
-            eager=False
-        )
-        victims[fam] = cur.join(nxt, "doc_id", "left_anti").localCheckpoint(
-            eager=False
-        )
-        cur = nxt
-    _pool.shutdown(wait=True)
+            nxt = dd.neardup_survivors_converged(
+                cur, restricted
+            ).localCheckpoint(eager=False)
+            victims[fam] = cur.join(
+                nxt, "doc_id", "left_anti"
+            ).localCheckpoint(eager=False)
+            cur = nxt
     final = cur
     n_final = final.agg(F.count(F.lit(1)).alias("__nf"))
 
@@ -6285,10 +6300,12 @@ def _cross_family_cycle_ctx(
     union_pairs = union_pairs.localCheckpoint(eager=False)
 
     def admit(batch, batch_half, extra_reg_h=None, upd_ev=None, union_ev=None):
-        """One keep-one admission cycle: exact gate (base hashes plus the
-        optional delta), registry near-dup evidence, optional update
-        (vs-A1) evidence, then ONE converged CC over the intra-batch
-        union evidence graph. Returns (admitted, [rejected frames]).
+        """One keep-one admission cycle (:func:`admission_decisions`)
+        with batch membership by id arithmetic: exact gate (base hashes
+        plus the optional delta), registry near-dup evidence, optional
+        update (vs-A1) evidence, then the CC over the intra-batch union
+        evidence graph. Returns (admitted, [rejected frames]) in gate
+        order.
 
         ``union_ev`` (r18, pipe13): replaces the shared union evidence
         graph for compositions whose video predicate must be PER-CYCLE
@@ -6298,24 +6315,8 @@ def _cross_family_cycle_ctx(
         gate_h = reg_h if extra_reg_h is None else reg_h.unionByName(
             extra_reg_h
         )
-        rej_exact = batch.join(gate_h, "__h", "left_semi").select(
-            "doc_id"
-        ).localCheckpoint(eager=False)
-        rem = batch.join(rej_exact, "doc_id", "left_anti")
-        keep = rem.groupBy("__h").agg(F.min("doc_id").alias("__keep"))
-        rej_exact_intra = (
-            rem.join(keep, "__h")
-            .filter(F.col("doc_id") != F.col("__keep"))
-            .select("doc_id")
-            .localCheckpoint(eager=False)
-        )
-        standing = (
-            rem.select("doc_id")
-            .join(rej_exact_intra, "doc_id", "left_anti")
-            .localCheckpoint(eager=False)
-        )
-        reg_ev = (
-            ev.filter(
+        evidence = {
+            "neardup_registry": ev.filter(
                 batch_half(F.col("id_a")) & registry_pred(F.col("id_b"))
             )
             .select(F.col("id_a").alias("doc_id"))
@@ -6325,46 +6326,16 @@ def _cross_family_cycle_ctx(
                 ).select(F.col("id_b").alias("doc_id"))
             )
             .distinct()
-        )
-        rej_reg = standing.join(reg_ev, "doc_id", "left_semi").localCheckpoint(
-            eager=False
-        )
-        standing = standing.join(
-            rej_reg, "doc_id", "left_anti"
-        ).localCheckpoint(eager=False)
-        rejs = [rej_exact, rej_exact_intra, rej_reg]
+        }
         if upd_ev is not None:
-            rej_upd = standing.join(
-                upd_ev, "doc_id", "left_semi"
-            ).localCheckpoint(eager=False)
-            standing = standing.join(
-                rej_upd, "doc_id", "left_anti"
-            ).localCheckpoint(eager=False)
-            rejs.append(rej_upd)
-        intra = (
-            ev.filter(
-                batch_half(F.col("id_a")) & batch_half(F.col("id_b"))
-            )
-            .join(
-                standing.select(F.col("doc_id").alias("id_a")),
-                "id_a",
-                "left_semi",
-            )
-            .join(
-                standing.select(F.col("doc_id").alias("id_b")),
-                "id_b",
-                "left_semi",
-            )
-            .localCheckpoint(eager=False)
+            evidence["update"] = upd_ev
+        admitted, rejected = admission_decisions(
+            batch,
+            gate_h,
+            evidence,
+            ev.filter(batch_half(F.col("id_a")) & batch_half(F.col("id_b"))),
         )
-        admitted = dd.neardup_survivors_converged(
-            standing, intra
-        ).localCheckpoint(eager=False)
-        # the CC-rejected frame is consumed exactly once (the audit
-        # row's tile union) — no checkpoint (r19; its barrier bought
-        # nothing, and standing/admitted are already leaves)
-        rejs.append(standing.join(admitted, "doc_id", "left_anti"))
-        return admitted, rejs
+        return admitted, list(rejected.values())
 
     return {
         "half1": half1,

@@ -9,8 +9,8 @@ rejected content must never gate future batches. This module composes
 all five signature families into that decision loop as one foreachBatch
 sink:
 
-per micro-batch (pipe11's ``admit()`` keep-one semantics — UNION
-evidence across families into ONE converged CC, which is NOT
+per micro-batch (the keep-one semantics pipe11-13's cycles share —
+UNION evidence across families into ONE converged CC, which is NOT
 pipe10's sequential per-family resolution: on text pair (1,2) +
 image pair (2,3), pipe10 admits {1,3} (the image edge vanishes once
 2 is text-rejected) while the union CC admits {1} — the union policy
@@ -22,10 +22,10 @@ nobody ports pipe10's measured numbers to the sink):
 2. read each family's ACCUMULATED admitted-only index (prior batches —
    ``_read_index_before``, the shared replay contract: a redelivered
    batch sees exactly the registry state of its first delivery);
-3. gates in order: exact-vs-registry, exact intra keep-min, union
-   near-dup evidence vs registry (all four families' incremental
-   probes), then ONE converged CC over the intra-batch union graph
-   keeping component minima;
+3. :func:`admission_decisions`' gates in order: exact-vs-registry,
+   exact intra keep-min, union near-dup evidence vs registry (all four
+   families' incremental probes), then ONE converged CC over the
+   intra-batch union graph keeping component minima;
 4. write one decision row per doc (doc_id, admitted, reason) and append
    ONLY the admitted docs' signature rows to each family index, both
    under ``batch_id=`` partitions (dynamic overwrite → replay rewrites
@@ -266,6 +266,79 @@ def compact_admission_registries(
     return folded
 
 
+def admission_decisions(
+    batch_h: DataFrame,
+    registry_h: DataFrame,
+    evidence: dict,
+    intra_pairs: DataFrame,
+) -> tuple[DataFrame, dict]:
+    """The keep-one admission gate chain — the one implementation behind
+    :func:`admission_sink` and the catalog's registry-update cycles
+    (pipe11/pipe12/pipe13 and their probes).
+
+    - ``batch_h``: the batch as ``(doc_id, __h)``, ``__h`` its content
+      hash;
+    - ``registry_h``: the admitted content hashes ``(__h)``;
+    - ``evidence``: ordered ``{reason: doc_id frame}`` — each frame
+      names batch docs with near-dup evidence against admitted content
+      (the registry, or a previous cycle's admits);
+    - ``intra_pairs``: batch-internal near-dup edges ``(id_a, id_b)``.
+
+    Gates run in order, each over the docs still standing after the
+    previous ones: exact vs registry; exact intra-batch (keep the min
+    doc_id per hash); every evidence reason; then ONE converged CC over
+    the standing docs' intra-batch edges, keeping component minima.
+    Batch membership is the caller's business — it shapes ``evidence``
+    and ``intra_pairs`` before they arrive here.
+
+    Returns ``(admitted, rejected)``: ``admitted`` is ``(doc_id)`` and
+    ``rejected`` an ordered ``{reason: doc_id frame}`` —
+    ``exact_registry``, ``exact_intra``, the evidence reasons, then
+    ``neardup_intra``. Admitted and rejected frames tile the batch."""
+    rej_exact = (
+        batch_h.join(registry_h, "__h", "left_semi")
+        .select("doc_id")
+        .localCheckpoint(eager=False)
+    )
+    rem = batch_h.join(rej_exact, "doc_id", "left_anti")
+    keep = rem.groupBy("__h").agg(F.min("doc_id").alias("__keep"))
+    rej_exact_intra = (
+        rem.join(keep, "__h")
+        .filter(F.col("doc_id") != F.col("__keep"))
+        .select("doc_id")
+        .localCheckpoint(eager=False)
+    )
+    standing = (
+        rem.select("doc_id")
+        .join(rej_exact_intra, "doc_id", "left_anti")
+        .localCheckpoint(eager=False)
+    )
+    rejected = {"exact_registry": rej_exact, "exact_intra": rej_exact_intra}
+    for reason, ev in evidence.items():
+        rejected[reason] = standing.join(
+            ev, "doc_id", "left_semi"
+        ).localCheckpoint(eager=False)
+        standing = standing.join(
+            rejected[reason], "doc_id", "left_anti"
+        ).localCheckpoint(eager=False)
+    intra = (
+        intra_pairs.join(
+            standing.select(F.col("doc_id").alias("id_a")), "id_a", "left_semi"
+        )
+        .join(
+            standing.select(F.col("doc_id").alias("id_b")), "id_b", "left_semi"
+        )
+        .localCheckpoint(eager=False)
+    )
+    admitted = dd.neardup_survivors_converged(standing, intra).localCheckpoint(
+        eager=False
+    )
+    # consumed once by each caller (the sink's decisions union, the
+    # cycles' audit tile) — a barrier here bought nothing
+    rejected["neardup_intra"] = standing.join(admitted, "doc_id", "left_anti")
+    return admitted, rejected
+
+
 def admission_sink(
     index_root: str,
     decisions_dir: str,
@@ -346,7 +419,7 @@ def admission_sink(
                 )
             batch_df = batch_df.withColumnRenamed(id_col, "doc_id")
         batch_df = batch_df.localCheckpoint(eager=False)
-        ids = batch_df.select("doc_id").localCheckpoint(eager=False)
+        ids = batch_df.select("doc_id")  # a projection of the batch leaf
 
         # ---- 1. signature passes, once per family ----
         payload = mm.attach_binary_payload(batch_df, text_col)
@@ -431,77 +504,28 @@ def admission_sink(
             ids.select(F.col("doc_id").alias("id_a")), "id_a", "left_semi"
         ).join(ids.select(F.col("doc_id").alias("id_b")), "id_b", "left_semi")
 
-        # ---- 4. gates, pipe10 order ----
-        hashed = sig["exact"].select(F.col("id").alias("doc_id"), "h")
-        rej_exact = (
-            hashed.join(views["exact"].select("h").distinct(), "h", "left_semi")
-            .select("doc_id")
-            .localCheckpoint(eager=False)
+        # ---- 4. gates ----
+        admitted, rejected = admission_decisions(
+            sig["exact"].select(
+                F.col("id").alias("doc_id"), F.col("h").alias("__h")
+            ),
+            views["exact"].select(F.col("h").alias("__h")).distinct(),
+            {"neardup_registry": reg_ev},
+            intra,
         )
-        rem = hashed.join(rej_exact, "doc_id", "left_anti")
-        keep = rem.groupBy("h").agg(F.min("doc_id").alias("__keep"))
-        rej_exact_intra = (
-            rem.join(keep, "h")
-            .filter(F.col("doc_id") != F.col("__keep"))
-            .select("doc_id")
-            .localCheckpoint(eager=False)
+        decisions = admitted.select(
+            "doc_id",
+            F.lit(1).alias("admitted"),
+            F.lit("admitted").alias("reason"),
         )
-        standing = (
-            ids.join(rej_exact, "doc_id", "left_anti")
-            .join(rej_exact_intra, "doc_id", "left_anti")
-            .localCheckpoint(eager=False)
-        )
-        rej_reg = standing.join(reg_ev, "doc_id", "left_semi").localCheckpoint(
-            eager=False
-        )
-        standing = standing.join(
-            rej_reg, "doc_id", "left_anti"
-        ).localCheckpoint(eager=False)
-        intra_standing = intra.join(
-            standing.select(F.col("doc_id").alias("id_a")), "id_a", "left_semi"
-        ).join(
-            standing.select(F.col("doc_id").alias("id_b")), "id_b", "left_semi"
-        )
-        admitted = dd.neardup_survivors_converged(
-            standing, intra_standing
-        ).localCheckpoint(eager=False)
-        rej_intra = standing.join(admitted, "doc_id", "left_anti")
-
-        decisions = (
-            admitted.select(
-                "doc_id",
-                F.lit(1).alias("admitted"),
-                F.lit("admitted").alias("reason"),
-            )
-            .unionByName(
-                rej_exact.select(
+        for reason, rej in rejected.items():
+            decisions = decisions.unionByName(
+                rej.select(
                     "doc_id",
                     F.lit(0).alias("admitted"),
-                    F.lit("exact_registry").alias("reason"),
+                    F.lit(reason).alias("reason"),
                 )
             )
-            .unionByName(
-                rej_exact_intra.select(
-                    "doc_id",
-                    F.lit(0).alias("admitted"),
-                    F.lit("exact_intra").alias("reason"),
-                )
-            )
-            .unionByName(
-                rej_reg.select(
-                    "doc_id",
-                    F.lit(0).alias("admitted"),
-                    F.lit("neardup_registry").alias("reason"),
-                )
-            )
-            .unionByName(
-                rej_intra.select(
-                    "doc_id",
-                    F.lit(0).alias("admitted"),
-                    F.lit("neardup_intra").alias("reason"),
-                )
-            )
-        )
         write_batch_partition(decisions, decisions_dir, batch_id)
 
         # ---- 5. registry updates: ADMITTED rows only ----

@@ -1154,91 +1154,6 @@ def contamination_overlap(
     )
 
 
-def neardup_clusters(
-    pairs: DataFrame,
-    max_iterations: int = 10,
-) -> DataFrame:
-    """Connected components over near-dup pairs → (id, cluster_id).
-
-    Iterative min-label propagation (the standard Spark-native connected
-    components): every node starts labeled with itself; each round, every
-    node adopts the minimum label in its neighborhood; stop at fixpoint.
-    Rounds needed = graph diameter — near-dup clusters are dense and tiny
-    (dup families), so this converges in 2–3 rounds in practice; the
-    ``max_iterations`` bound makes the worst case (a long chain) explicit.
-    Each round is one join + one groupBy on the node id — no driver-side
-    graph. Input: columns ``id_a``, ``id_b``.
-    """
-    edges = (
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-        .distinct()
-    )
-    labels = edges.select(F.col("src").alias("id")).distinct().withColumn(
-        "cluster_id", F.col("id")
-    )
-    for _ in range(max_iterations):
-        neighbor_min = (
-            edges.join(labels, edges.dst == labels.id)
-            .groupBy("src")
-            .agg(F.min("cluster_id").alias("nbr_min"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, labels.id == neighbor_min.src, "left")
-            .select(
-                "id",
-                F.least(F.col("cluster_id"), F.coalesce(F.col("nbr_min"), F.col("cluster_id"))).alias(
-                    "cluster_id"
-                ),
-            )
-            # truncate lineage each round: without this each iteration's plan
-            # embeds all previous iterations and optimization time grows
-            # exponentially (measured: 8-round chain 2min → 15s). The
-            # standard discipline for iterative DataFrame algorithms.
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .filter(F.col("n.cluster_id") != F.col("o.cluster_id"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels
-
-
-def neardup_survivors(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Keep one document per near-dup cluster (the min id), drop the rest.
-
-    The terminal step of the dedup pipeline: LSH pairs → components →
-    anti-join the non-survivors. Documents in no pair survive untouched.
-
-    .. warning:: SOFT-DEPRECATED for new callers (ADVICE r15 #3): this
-       form inherits :func:`neardup_clusters`' bounded-best-effort
-       10-round contract, which returns silently-WRONG labels on
-       components whose diameter exceeds the budget (demonstrated at
-       sf0.1: 634 wrong labels on a 39-hop chain while sf0.01 parity
-       stayed green). It is kept byte-for-byte because the certified
-       dd7/pipe1 chain pins it; every NEW caller should use
-       :func:`neardup_survivors_converged`, which runs log-diameter
-       pointer-doubling rounds and VERIFIES the fixpoint (exact or
-       loud, never silent). When the dd7/pipe1 fingerprints next rotate
-       for an unrelated reason, fold this into the converged form.
-    """
-    clusters = neardup_clusters(pairs)
-    victims = clusters.filter(F.col("id") != F.col("cluster_id")).select(
-        F.col("id").alias(id_col)
-    )
-    return df.join(victims, id_col, "left_anti")
-
-
 def semantic_dedup(
     df: DataFrame,
     centroids: list[list[float]],
@@ -2573,9 +2488,13 @@ def _cc_pointer_doubling(
 ) -> tuple[DataFrame, int, bool]:
     """Exact min-label connected components in LOG-DIAMETER rounds —
     Shiloach–Vishkin-style hooking + pointer jumping over DataFrames
-    (r16, VERDICT r15 #2: :func:`neardup_clusters`' one-hop min-label
-    propagation needs diameter-many rounds; sf0.1's 39-hop video chain
-    made dd32 the suite's long pole at 16.3 s).
+    (r16, VERDICT r15 #2: one-hop min-label propagation needs
+    diameter-many rounds; sf0.1's 39-hop video chain made dd32 the
+    suite's long pole at 16.3 s). The repo's one CC routine — every
+    survivor entry and admission gate reaches it through
+    :func:`neardup_survivors_converged`; the r17 large-star/small-star
+    comparison (Kiveris et al., SoCC'14) measured it faster on all five
+    studied topologies (SCALE.md r17).
 
     Per round: (1) HOOK — for every edge whose endpoints carry different
     labels, propose the smaller label to the NODE named by the larger
@@ -2630,7 +2549,7 @@ def _cc_pointer_doubling(
         sym.groupBy("id")
         .agg(F.min("nb").alias("__mn"))
         .select("id", F.least(F.col("id"), F.col("__mn")).alias("cluster_id"))
-        # lineage cut per round (the neardup_clusters discipline):
+        # lineage cut per round (the iterative-DataFrame discipline):
         # without it each iteration's plan embeds all previous ones.
         # eager=True is LOAD-BEARING (r19 re-measured: eager=False was
         # tried to fold this job into the props probe and regressed
@@ -2685,127 +2604,22 @@ def _cc_pointer_doubling(
     return labels, rounds, proven
 
 
-def _cc_alternating_star(
-    pairs: DataFrame,
-    max_rounds: int = 64,
-) -> "tuple[DataFrame, int]":
-    """Min-label connected components via the ALTERNATING large-star /
-    small-star algorithm (Kiveris et al., "Connected Components in
-    MapReduce and Beyond", SoCC'14 — the algorithm family GraphFrames'
-    connectedComponents implements). r17 STUDY ARM ONLY: the production
-    CC is :func:`_cc_pointer_doubling`; this exists so the choice
-    between the two is a measured comparison on multiple graph
-    topologies (scripts/run_cc_compare_probe.py, SCALE.md r17) instead
-    of a citation. Not wired into any catalog entry.
-
-    Per round, the EDGE SET itself is rewritten (vs pointer doubling's
-    fixed edge set + shrinking label frame):
-
-    - large-star: every node u connects its strictly-larger neighbors
-      to m(u) = min(N(u) ∪ {u});
-    - small-star: edges orient toward the smaller endpoint; every node
-      u connects its ≤-neighbors and itself to m(u).
-
-    Both phases are one groupBy + one join over the current edge set.
-    Converged when a large+small round leaves the edge set unchanged
-    (count equal AND exceptAll empty — count alone could alias). At the
-    fixpoint the edges form stars rooted at component minima, so labels
-    read directly off the edge list. Proven O(log^2 n) rounds; in
-    practice a handful. Returns ``(labels, rounds_used)`` with labels =
-    (id, cluster_id) for every node in ``pairs``, exactly
-    :func:`_cc_pointer_doubling`'s contract (equality asserted per
-    topology in the probe)."""
-    nodes = (
-        pairs.select(F.col("id_a").alias("id"))
-        .union(pairs.select(F.col("id_b").alias("id")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    edges = (
-        pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    rounds = 0
-    converged = False
-    for _ in range(max_rounds):
-        # ---- large-star ----
-        nbr = edges.select(
-            F.col("a").alias("u"), F.col("b").alias("v")
-        ).union(edges.select(F.col("b").alias("u"), F.col("a").alias("v")))
-        mins = nbr.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
-        large = (
-            nbr.filter(F.col("v") > F.col("u"))
-            .join(mins, "u")
-            .select(F.col("v").alias("a"), F.col("m").alias("b"))
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        # ---- small-star ----
-        toward_small = large.select(
-            F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v")
-        )
-        smins = toward_small.groupBy("u").agg(F.min("v").alias("m"))
-        sm_children = (
-            toward_small.join(smins, "u")
-            .select(F.col("v").alias("a"), F.col("m").alias("b"))
-            .filter(F.col("a") != F.col("b"))
-        )
-        sm_self = smins.select(
-            F.col("u").alias("a"), F.col("m").alias("b")
-        ).filter(F.col("a") != F.col("b"))
-        small = (
-            sm_children.union(sm_self).distinct().localCheckpoint(eager=True)
-        )
-        rounds += 1
-        if small.count() == edges.count() and small.exceptAll(
-            edges
-        ).isEmpty():
-            edges = small
-            converged = True
-            break
-        edges = small
-    if not converged and not edges.isEmpty():
-        # a non-fixpoint edge set is not a star forest: a node adjacent
-        # to two centers would emit TWO (id, cluster_id) rows and the
-        # labels frame silently stops being a function — the exact
-        # silent-truncation class neardup_survivors_converged raises on
-        # (r17 review). Study arm or not, exact-or-loud. Checked via the
-        # edge set, not the round counter, so max_rounds<=0 on a
-        # nonempty graph also raises (second-review catch).
-        raise RuntimeError(
-            "_cc_alternating_star: edge set did not reach the star-forest "
-            f"fixpoint within {max_rounds} rounds — raise max_rounds"
-        )
-    child_labels = edges.select(
-        F.col("a").alias("id"), F.col("b").alias("cluster_id")
-    )
-    labels = nodes.join(child_labels, "id", "left").select(
-        "id", F.coalesce("cluster_id", F.col("id")).alias("cluster_id")
-    )
-    return labels, rounds
-
-
 def neardup_survivors_converged(
     df: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
     max_iterations: int = 64,
 ) -> DataFrame:
-    """:func:`neardup_survivors` with a VERIFIED fixpoint — the form the
-    oracle-certified survivor entries (dd31/dd32) use.
+    """Keep one document per near-dup cluster (the min id), drop the
+    rest — LSH pairs → components → anti-join the non-survivors;
+    documents in no pair survive untouched. Every survivor entry and
+    admission gate uses it.
 
-    :func:`neardup_clusters` returns silently-TRUNCATED labels when a
-    component's min label is farther than ``max_iterations`` hops from
-    some member (dd7's long-standing bounded-best-effort contract, kept
-    as-is — this wrapper exists so the certified dd7/pipe1 chain stays
-    untouched). Truncation would silently diverge from dd31/dd32's
-    EXACT recursive-CTE transitive-closure oracles, so this wrapper
-    (a) resolves components with :func:`_cc_pointer_doubling` — hooking
+    The fixpoint is VERIFIED: the retired one-hop loop returned
+    silently-TRUNCATED labels past its round budget (634 wrong labels
+    on sf0.1's 39-hop chain), which would silently diverge from
+    dd31/dd32's EXACT recursive-CTE transitive-closure oracles, so this
+    form (a) resolves components with :func:`_cc_pointer_doubling` — hooking
     + pointer jumping, ~log4(diameter) rounds instead of diameter (r16;
     the r15 form propagated one hop per round and paid 39 rounds on
     sf0.1's video chain) — and (b) VERIFIES the fixpoint from outside
