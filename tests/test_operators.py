@@ -10,6 +10,7 @@ from tranquility_spark.operators.parse import parse_json_events
 from tranquility_spark.operators.partitioning import portable_shard_sql, with_shard
 from tranquility_spark.operators.window_filter import (
     two_sided_window_filter,
+    window_condition,
     window_period_seconds,
 )
 
@@ -43,6 +44,61 @@ def test_window_filter_latest_close_time(spark):
     df = spark.createDataFrame(rows, "id long, ts timestamp")
     kept = {r["id"] for r in two_sided_window_filter(df, "ts", "PT10M", now=now, latest_close_time=close).collect()}
     assert kept == {2}
+
+
+def test_window_condition_sql_matches_literal_columns(spark):
+    """The SQL-text predicate converts ``now``/``latestCloseTime`` exactly as
+    ``F.lit(value).cast("timestamp")`` does: aware datetimes as their UTC
+    instant, naive ones as host-local time (checked on a non-UTC host) or,
+    where the session prefers TIMESTAMP_NTZ, session-zone time, and strings
+    in the session time zone. Every row gets the same verdict."""
+    import os
+    import time
+
+    old_tz = os.environ.get("TZ")
+    os.environ["TZ"] = "America/Los_Angeles"
+    time.tzset()
+    try:
+        base = dt.datetime(2024, 3, 10, 9, 0, 0)  # the US spring-forward day
+        utc = dt.timezone.utc
+        # events every 7 min for +-14 h around 09:00 PDT = 16:00 UTC
+        base_us = int(dt.datetime(2024, 3, 10, 16, 0, tzinfo=utc).timestamp()) * 10**6
+        df = spark.range(-120, 121).selectExpr(
+            "id", f"timestamp_micros({base_us} + id * 420000000) AS `ev ts`"
+        )
+        probes = [  # (now, latest_close_time, session prefers TIMESTAMP_NTZ)
+            (base, None, False),
+            (base, base - dt.timedelta(minutes=20), False),
+            (dt.datetime(2024, 3, 10, 16, 0, tzinfo=utc), dt.datetime(2024, 3, 10, 15, 45, tzinfo=utc), False),
+            (dt.datetime(2024, 3, 10, 11, 0, tzinfo=dt.timezone(dt.timedelta(hours=-5))), None, False),
+            ("2024-03-10 16:30:00", "2024-03-10 16:24:00", False),
+            (base, base - dt.timedelta(minutes=20), True),
+        ]
+        cols = []
+        for k, (now, close, ntz) in enumerate(probes):
+            if ntz:
+                spark.conf.set("spark.sql.timestampType", "TIMESTAMP_NTZ")
+            try:
+                ts, now_col = F.col("`ev ts`"), F.lit(now).cast("timestamp")
+                want = (ts >= now_col - F.expr("INTERVAL 3600 SECONDS")) & (
+                    ts <= now_col + F.expr("INTERVAL 3600 SECONDS")
+                )
+                if close is not None:
+                    want = want & (ts > F.lit(close).cast("timestamp"))
+                got = F.expr(window_condition("ev ts", "PT1H", now, close))
+            finally:
+                spark.conf.unset("spark.sql.timestampType")
+            cols += [want.alias(f"want{k}"), got.alias(f"got{k}")]
+        rows = df.select(*cols).collect()
+        for k, probe in enumerate(probes):
+            want = [r[f"want{k}"] for r in rows]
+            assert [r[f"got{k}"] for r in rows] == want and any(want), probe
+    finally:
+        if old_tz is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
 
 
 def test_portable_shard_matches_duckdb(spark, duck):

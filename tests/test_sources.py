@@ -192,6 +192,39 @@ def test_kafka_main_pipeline_without_broker(spark, tmp_path):
     assert multi.sinks["metrics"].read(spark).count() == 1
 
 
+def test_http_ingest_exact_drop_counts_per_reason(spark):
+    """One 500-event POST: 15 events 30 min outside PT10M, 5 with an
+    unparseable timestamp. The response and the Tranquilizer's per-reason
+    counters account for every event exactly."""
+    spec = IngestSpec(
+        datasource="push",
+        timestamp_spec=TimestampSpec(column="timestamp", format="iso", output="ts"),
+        dimensions_spec=DimensionsSpec(dimensions=["page", "user"]),
+        metrics=(Count("n"), DoubleSum("added_sum", "added")),
+        granularity_spec=GranularitySpec("MINUTE", "SECOND"),
+    )
+    events = []
+    for i in range(500):
+        if i % 100 < 3:  # 15 events, alternately 30 min early and late
+            t = NOW + dt.timedelta(minutes=30 if i % 2 else -30, seconds=i)
+        else:
+            t = NOW + dt.timedelta(milliseconds=(i * 7919) % 600_000 - 300_000)
+        stamp = "not-a-time" if i % 100 == 50 else t.strftime("%Y-%m-%dT%H:%M:%S.%f")[:-3]
+        events.append({"timestamp": stamp, "eid": i, "page": f"page{i % 50}",
+                       "user": i * 31 % 10_000, "added": (i % 4000) / 4.0})
+    beam = MemoryBeam()
+    t = Tranquilizer(spark, spec, beam, window_period="PT10M", clock=lambda: NOW)
+    server = IngestServer({"push": t}).start()
+    try:
+        status, body = _post(f"http://127.0.0.1:{server.port}/v1/post/push", events)
+    finally:
+        server.stop()
+    assert status == 200 and body == {"result": {"received": 500, "sent": 480}}
+    assert t.dropped_window == 15 and t.dropped_unparseable == 5
+    assert t.sent_count == 480 and t.sent_count + t.dropped_count == 500
+    assert len(beam.rows()) == 480
+
+
 def test_http_ingest_malformed_body_400(spark):
     import urllib.request
 

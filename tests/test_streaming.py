@@ -6,6 +6,7 @@ and a true Structured Streaming end-to-end run checked against the batch rollup.
 
 from __future__ import annotations
 
+import contextlib
 import datetime as dt
 import json
 import os
@@ -55,6 +56,7 @@ def test_tranquilizer_send_and_drop(spark):
         with pytest.raises(MessageDroppedException):
             f.result()
     assert t.sent_count == 1 and t.dropped_count == 3
+    assert t.dropped_window == 2 and t.dropped_unparseable == 1
     rows = beam.rows()
     assert len(rows) == 1 and rows.iloc[0]["page"] == "a"
 
@@ -67,6 +69,160 @@ def test_tranquilizer_autoflush_at_max_batch(spark):
     # batch size reached → flushed without close()
     assert len(beam.batches) == 1 and len(beam.rows()) == 3
     t.close()
+
+
+_JOB_GROUP_PROPS = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+
+
+@contextlib.contextmanager
+def _job_group(sc, group):
+    """Run the block's Spark jobs under ``group``, then restore the thread's
+    own job group."""
+    saved = [sc.getLocalProperty(p) for p in _JOB_GROUP_PROPS]
+    sc.setJobGroup(group, group)
+    try:
+        yield
+    finally:
+        for prop, value in zip(_JOB_GROUP_PROPS, saved):
+            sc.setLocalProperty(prop, value)
+
+
+class _CapturingBeam(MemoryBeam):
+    """MemoryBeam that keeps each batch frame's schema, rows and RDD lineage,
+    and runs its own Spark work under a separate job group so the caller's
+    group counts only the flush's jobs."""
+
+    def __init__(self, spark):
+        super().__init__()
+        self.sc = spark.sparkContext
+        self.frames = []
+
+    def send_all(self, df):
+        with _job_group(self.sc, "capturing-beam"):
+            self.frames.append({
+                "schema": df.schema,
+                "rows": df.collect(),
+                "lineage": df._jdf.queryExecution().toRdd().toDebugString(),
+            })
+            return super().send_all(df)
+
+
+def test_tranquilizer_flush_is_one_arrow_job(spark):
+    """A flush runs exactly one Spark job of its own (the disposition and the
+    beam's batch come from one Arrow collect), and the batch it hands the
+    beam is Arrow-backed: no Python worker in its lineage."""
+    import uuid
+
+    sc = spark.sparkContext
+    beam = _CapturingBeam(spark)
+    t = Tranquilizer(spark, _spec(), beam, window_period="PT10M", clock=lambda: NOW)
+    futs = [
+        t.send(_ev("2024-06-01T11:55:00", page="ok1")),
+        t.send(_ev("2024-06-01T12:04:59", page="ok2")),
+        t.send(_ev("2024-06-01T10:00:00", page="late")),
+        t.send(_ev("junk", page="bad")),
+    ]
+    group = f"tranquilizer-flush-{uuid.uuid4().hex}"
+    with _job_group(sc, group):
+        t.flush()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    (frame,) = beam.frames
+    assert "PythonRDD" not in frame["lineage"], frame["lineage"]
+    assert sorted(r["page"] for r in frame["rows"]) == ["ok1", "ok2"]
+    assert [f.exception() is None for f in futs] == [True, True, False, False]
+    assert (t.sent_count, t.dropped_window, t.dropped_unparseable) == (2, 1, 1)
+
+
+def test_tranquilizer_matches_list_frame_recomputation_on_non_utc_host(spark):
+    """The Arrow-backed flush infers and converts exactly as
+    ``spark.createDataFrame(events)`` does, checked against that independent
+    recomputation (list frame → timestamp extraction → window filter) on a
+    non-UTC host: a naive datetime is host-local time there, as
+    ``TimestampType.toInternal`` reads it, not UTC."""
+    import time
+
+    from tranquility_spark.operators.window_filter import two_sided_window_filter
+
+    now = dt.datetime(2024, 6, 1, 18, 0, tzinfo=dt.timezone.utc)
+    now_ms = int(now.timestamp() * 1000)
+
+    def spec(fmt):
+        return IngestSpec(
+            datasource="wiki",
+            timestamp_spec=TimestampSpec(column="timestamp", format=fmt, output="ts"),
+            dimensions_spec=DimensionsSpec(dimensions=["page"]),
+            metrics=(Count("n"),),
+        )
+
+    # per case: the events and their intended dispositions. A naive datetime
+    # is Los Angeles time here: 11:05 PDT is 18:05 UTC (inside the window),
+    # and a naive 18:05 is 01:05 UTC the next day (outside it)
+    cases = [
+        (spec("iso"), [  # missing keys, nulls, nested dict, list, bool, unicode, 2**62
+            {"eid": 0, "timestamp": "2024-06-01T18:01:00", "page": "a", "attrs": {"k": 1, "j": 2},
+             "tags": [1, 2], "flag": True, "note": "ünïcødé", "big": 2**62},
+            {"eid": 1, "timestamp": "2024-06-01T17:55:00", "page": None, "tags": None,
+             "flag": False, "note": "x", "big": 1},
+            {"eid": 2, "timestamp": "not-a-time", "page": "c", "big": -(2**62)},
+            {"eid": 3, "timestamp": None, "page": "d", "attrs": {}},
+            {"eid": 4, "timestamp": "2024-06-01T17:00:00", "page": "e", "tags": []},
+            {"eid": 5, "page": "no-timestamp-key"},
+        ], ["sent", "sent", "unparseable", "unparseable", "window", "unparseable"]),
+        (spec("auto"), [  # naive (host-local) and aware datetimes
+            {"eid": 0, "timestamp": dt.datetime(2024, 6, 1, 11, 5), "page": "naive-local"},
+            {"eid": 1, "timestamp": dt.datetime(2024, 6, 1, 18, 5), "page": "naive-utc-wallclock"},
+            {"eid": 2, "timestamp": dt.datetime(2024, 6, 1, 17, 56, tzinfo=dt.timezone.utc),
+             "page": "aware-utc"},
+            {"eid": 3, "timestamp": dt.datetime(2024, 6, 1, 20, 3, 0, 123456,
+                                                tzinfo=dt.timezone(dt.timedelta(hours=2))),
+             "page": "aware-plus2"},
+            {"eid": 4, "timestamp": None, "page": "null"},
+        ], ["sent", "window", "sent", "sent", "unparseable"]),
+        (spec("millis"), [
+            {"eid": 0, "timestamp": now_ms + 1234, "page": "m"},
+            {"eid": 1, "timestamp": now_ms - 3_600_000, "page": "hour-old"},
+            {"eid": 2, "timestamp": None, "page": "null"},
+        ], ["sent", "window", "unparseable"]),
+    ]
+    old_tz = os.environ.get("TZ")
+    os.environ["TZ"] = "America/Los_Angeles"
+    time.tzset()
+    try:
+        for sp, events, intended in cases:
+            beam = _CapturingBeam(spark)
+            t = Tranquilizer(spark, sp, beam, window_period="PT10M", clock=lambda: now)
+            futs = [t.send(e) for e in events]
+            t.flush()
+
+            df = spark.createDataFrame(events)
+            parsed = df.withColumn("ts", sp.timestamp_spec.extract(df))
+            parse_ok = parsed.filter(F.col("ts").isNotNull())
+            accepted = two_sided_window_filter(parse_ok, "ts", "PT10M", now=now)
+            ok_eids = {r["eid"] for r in parse_ok.select("eid").collect()}
+            want_rows = sorted(accepted.collect(), key=lambda r: r["eid"])
+            want_disp = [
+                "sent" if e["eid"] in {r["eid"] for r in want_rows}
+                else "window" if e["eid"] in ok_eids else "unparseable"
+                for e in events
+            ]
+
+            (frame,) = beam.frames
+            got_disp = [
+                "sent" if f.exception() is None
+                else "unparseable" if "unparseable" in str(f.exception()) else "window"
+                for f in futs
+            ]
+            assert frame["schema"].simpleString() == parsed.schema.simpleString()
+            assert sorted(frame["rows"], key=lambda r: r["eid"]) == want_rows
+            assert got_disp == want_disp == intended
+            assert t.dropped_window == want_disp.count("window")
+            assert t.dropped_unparseable == want_disp.count("unparseable")
+    finally:
+        if old_tz is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
 
 
 # ---------------------------------------------------------------------------
@@ -3171,6 +3327,8 @@ def test_flush_failure_resolves_futures_exceptionally(spark, tmp_path):
     with pytest.raises(ValueError, match="reserved"):
         t.flush()
     assert fut.done() and isinstance(fut.exception(), ValueError)
+    # a failed flush's events count as dropped, under no per-reason counter
+    assert t.dropped_count == 1 and t.dropped_unparseable == t.dropped_window == 0
 
 
 def test_flush_batch_id_collision_is_loud(spark, tmp_path):

@@ -8679,7 +8679,7 @@ def emb7_dim_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def _gram_fold(batches):
-        from decimal import Decimal
+        from decimal import Context, Decimal
 
         import numpy as np
         import pyarrow as pa
@@ -8740,12 +8740,15 @@ def emb7_dim_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
                         p_cnt[(i, j)] += np_
         if n_rows == 0:
             return
+        # scaleb rounds to its context's precision (28 digits by default);
+        # 39 digits hold every decimal(38, s) partial exactly
+        exact = Context(prec=39)
         arrays = [pa.array([n_rows], type=pa.int64())]
         for i in range(d):
             arrays.append(
                 pa.array(
                     [
-                        Decimal(s_acc[i]).scaleb(-6)
+                        Decimal(s_acc[i]).scaleb(-6, exact)
                         if s_cnt[i] > 0
                         else None
                     ],
@@ -8756,7 +8759,7 @@ def emb7_dim_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
             arrays.append(
                 pa.array(
                     [
-                        Decimal(p_acc[ij]).scaleb(-12)
+                        Decimal(p_acc[ij]).scaleb(-12, exact)
                         if p_cnt[ij] > 0
                         else None
                     ],

@@ -18,8 +18,9 @@ from __future__ import annotations
 
 import datetime as _dt
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
+from pyspark.sql.types import TimestampType
+from pyspark.sql.utils import is_timestamp_ntz_preferred
 
 
 def _parse_iso_duration_seconds(period: str) -> int:
@@ -49,6 +50,50 @@ def window_period_seconds(period: str | int) -> int:
     return period if isinstance(period, int) else _parse_iso_duration_seconds(period)
 
 
+def quote_column(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _timestamp_sql(value: _dt.datetime | str) -> str:
+    """SQL text of the timestamp ``F.lit(value).cast("timestamp")`` builds:
+    an aware datetime is its UTC instant, a naive one is host-local time
+    (or session-zone wall-clock time where the session prefers
+    TIMESTAMP_NTZ), and a string is cast in the session time zone."""
+    if isinstance(value, _dt.datetime):
+        if value.tzinfo is None and is_timestamp_ntz_preferred():
+            return f"CAST(TIMESTAMP_NTZ '{value.isoformat(sep=' ')}' AS TIMESTAMP)"
+        return f"timestamp_micros({TimestampType().toInternal(value)})"
+    escaped = value.replace("\\", "\\\\").replace("'", "\\'")
+    return f"CAST('{escaped}' AS TIMESTAMP)"
+
+
+def window_condition(
+    ts_col: str = "ts",
+    window_period: str | int = "PT10M",
+    now: _dt.datetime | str | None = None,
+    latest_close_time: _dt.datetime | str | None = None,
+) -> str:
+    """The acceptance predicate ``|ts − now| ≤ windowPeriod`` (and after
+    latestCloseTime) as SQL text, so a filter or a per-row status embeds it
+    and the JVM parses it in one call instead of one py4j round trip per
+    Column operator.
+
+    ``now=None`` uses ``current_timestamp()`` (true reference semantics:
+    wall clock); pass a fixed datetime for deterministic tests/oracles.
+    """
+    secs = window_period_seconds(window_period)
+    now_sql = "current_timestamp()" if now is None else _timestamp_sql(now)
+    ts = quote_column(ts_col)
+    cond = (
+        f"{ts} >= {now_sql} - INTERVAL {secs} SECONDS"
+        f" AND {ts} <= {now_sql} + INTERVAL {secs} SECONDS"
+    )
+    if latest_close_time is not None:
+        cond += f" AND {ts} > {_timestamp_sql(latest_close_time)}"
+    return cond
+
+
 def two_sided_window_filter(
     df: DataFrame,
     ts_col: str = "ts",
@@ -56,17 +101,5 @@ def two_sided_window_filter(
     now: _dt.datetime | str | None = None,
     latest_close_time: _dt.datetime | str | None = None,
 ) -> DataFrame:
-    """Keep rows with ``|ts − now| ≤ windowPeriod`` (and after latestCloseTime).
-
-    ``now=None`` uses ``current_timestamp()`` (true reference semantics:
-    wall clock); pass a fixed datetime for deterministic tests/oracles.
-    """
-    secs = window_period_seconds(window_period)
-    now_col: Column = F.current_timestamp() if now is None else F.lit(now).cast("timestamp")
-    ts = F.col(ts_col)
-    cond = (ts >= now_col - F.expr(f"INTERVAL {secs} SECONDS")) & (
-        ts <= now_col + F.expr(f"INTERVAL {secs} SECONDS")
-    )
-    if latest_close_time is not None:
-        cond = cond & (ts > F.lit(latest_close_time).cast("timestamp"))
-    return df.filter(cond)
+    """Keep the rows ``window_condition`` accepts."""
+    return df.filter(window_condition(ts_col, window_period, now, latest_close_time))

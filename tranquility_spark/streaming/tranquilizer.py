@@ -5,13 +5,16 @@ Reference: ``core/.../tranquilizer/Tranquilizer.scala`` (~400 LoC) — per-event
 bounded in-flight batches (``maxPendingBatches`` 5) and ``lingerMillis`` (0);
 dropped events resolve their future with ``MessageDroppedException``.
 
-Spark restatement: ``send`` buffers dict events; a flush builds ONE DataFrame
-for the batch, applies the ingest spec's timestamp extraction + window-period
-acceptance, and hands the survivors to a Beam (``SegmentSink.write_batch`` or
-``MemoryBeam``). Each event's future resolves True, or raises
-``MessageDroppedException`` if its timestamp was out of window / unparseable —
-per-event disposition is computed vectorized (one filter), never row-by-row in
-Python.
+Spark restatement: ``send`` buffers dict events; a flush runs ONE Spark job.
+It converts the batch to an Arrow table (the schema and value conversion
+``createDataFrame(list)`` would use, but planned as a ``LocalTableScan``, so
+no Python worker runs), adds the ingest spec's timestamp extraction and a
+per-event status column (accepted / unparseable / outside the window period)
+in one plan, and collects it once with ``toArrow()``. The futures resolve
+from the status column: True, or ``MessageDroppedException`` naming the
+cause, counted in ``dropped_unparseable`` / ``dropped_window``. The beam
+(``SegmentSink.write_batch`` or ``MemoryBeam``) receives the accepted slice
+of that same Arrow table, so nothing is evaluated twice.
 
 Flushes are synchronous and deterministic (the default lingerMillis=0 was
 latency-biased anyway); ``maxPendingBatches`` back-pressure is therefore a
@@ -24,13 +27,19 @@ import datetime as _dt
 from concurrent.futures import Future
 from typing import Callable, Optional
 
+import pyarrow.compute as pc
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.conversion import LocalDataToArrowConversion
 
-from tranquility_spark.operators.window_filter import two_sided_window_filter
+from tranquility_spark.operators.window_filter import quote_column, window_condition
 from tranquility_spark.specs import IngestSpec
 
 DEFAULT_MAX_BATCH_SIZE = 2000  # ref: Tranquilizer#DefaultMaxBatchSize
+
+# flush-local columns: each event's position in the batch, and its disposition
+_IDX, _STATUS = "__send_idx", "__send_status"
+_ACCEPTED, _UNPARSEABLE, _OUTSIDE_WINDOW = "accepted", "unparseable", "window"
 
 
 class MessageDroppedException(Exception):
@@ -69,7 +78,11 @@ class Tranquilizer:
         # discarded while their futures still resolved sent=True.
         self._batch_id = beam.max_batch_id() if hasattr(beam, "max_batch_id") else 0
         self.sent_count = 0
+        # every event not sent: the two per-reason counts below, plus the
+        # events of a flush that failed
         self.dropped_count = 0
+        self.dropped_unparseable = 0
+        self.dropped_window = 0
 
     def send(self, event: dict) -> Future:
         """Buffer one event; returns a future resolving to SendResult(sent=True)
@@ -100,59 +113,53 @@ class Tranquilizer:
             raise
 
     def _flush(self, events: list, futures: list) -> None:
-        idx_col = "__send_idx"
+        rows = [{**e, _IDX: i} for i, e in enumerate(events)]
+        # the schema createDataFrame(rows) would infer, and its value
+        # conversion (a naive datetime is host-local time, as
+        # TimestampType.toInternal reads it) — but Arrow-backed, so the
+        # plan is a LocalTableScan and no Python worker runs
+        schema = self.spark._inferSchemaFromList(rows, names=None)
         df = self.spark.createDataFrame(
-            [{**e, idx_col: i} for i, e in enumerate(events)]
+            LocalDataToArrowConversion.convert(rows, schema, use_large_var_types=False),
+            schema=schema,
         )
         ts_out = self.spec.timestamp_spec.output
-        parsed = df.withColumn(ts_out, self.spec.timestamp_spec.extract(df)).filter(
-            F.col(ts_out).isNotNull()
-        )
-        # ONE materialization of the real plan (r14 code-review: the old
-        # collect-then-write evaluated the lazy plan twice, and with a
-        # wall-clock window filter — F.current_timestamp() re-resolves per
-        # action — the write could drop boundary rows the disposition had
-        # already acknowledged as sent). Everything after this line
-        # operates on the <= max_batch_size collected rows.
-        parse_rows = parsed.collect()
-        parse_ok_idx = {r[idx_col] for r in parse_rows}
-        small = self.spark.createDataFrame(parse_rows, parsed.schema)
+        parsed = df.withColumn(ts_out, self.spec.timestamp_spec.extract(df))
+        status = f"CASE WHEN {quote_column(ts_out)} IS NULL THEN '{_UNPARSEABLE}'"
         if self.window_period is not None:
-            # resolve 'now' driver-side exactly once per flush so the
-            # disposition and the written rows see the SAME instant.
-            # Keep it tz-AWARE: PySpark converts aware datetimes via the
-            # UTC instant (calendar.timegm), while a naive one goes
-            # through time.mktime in the driver's OS timezone — on any
-            # non-UTC host that would shift the window center by the UTC
-            # offset and drop every current event (ADVICE r14, high).
+            # resolve 'now' driver-side exactly once per flush. Keep it
+            # tz-AWARE: a naive datetime is read as the driver's OS local
+            # time, so on any non-UTC host it would shift the window center
+            # by the UTC offset and drop every current event.
             now = self.clock() if self.clock else _dt.datetime.now(_dt.timezone.utc)
-            small = two_sided_window_filter(
-                small, ts_out, self.window_period, now=now
-            )
-        accepted_rows = (
-            small.collect() if self.window_period is not None else parse_rows
+            cond = window_condition(ts_out, self.window_period, now=now)
+            status += f" WHEN NOT ({cond}) THEN '{_OUTSIDE_WINDOW}'"
+        status += f" ELSE '{_ACCEPTED}' END"
+        # ONE materialization: the per-event disposition and the rows handed
+        # to the beam both come from this single Arrow collect, so a plan
+        # is never evaluated twice (a second evaluation could disagree with
+        # the first on boundary rows) and the beam's batch is built from
+        # the accepted slice of the same table.
+        table = parsed.withColumn(_STATUS, F.expr(status)).toArrow()
+        disposition = dict(
+            zip(table.column(_IDX).to_pylist(), table.column(_STATUS).to_pylist())
         )
-        accepted_idx = {r[idx_col] for r in accepted_rows}
-        batch_schema = parsed.drop(idx_col).schema
+        accepted = table.filter(pc.equal(table.column(_STATUS), _ACCEPTED))
         batch = self.spark.createDataFrame(
-            [
-                {k: v for k, v in r.asDict(recursive=False).items() if k != idx_col}
-                for r in accepted_rows
-            ],
-            schema=batch_schema,
+            accepted.drop_columns([_IDX, _STATUS]),
+            schema=parsed.drop(_IDX).schema,
         )
 
         self._batch_id += 1
-        expected = len(accepted_rows)
         if hasattr(self.beam, "write_batch"):
             written = self.beam.write_batch(batch, self._batch_id)
         else:
             written = self.beam.send_all(batch)
-        if expected > 0 and written == 0:
-            # r14 code-review: the sink SIGNALS a batch-id collision (a
-            # marker already committed under this id — the misconfigured
-            # double-producer case) by returning 0; acknowledging these
-            # events as sent would be silent data loss
+        if accepted.num_rows > 0 and written == 0:
+            # the sink SIGNALS a batch-id collision (a marker already
+            # committed under this id — the misconfigured double-producer
+            # case) by returning 0; acknowledging these events as sent
+            # would be silent data loss
             raise MessageDroppedException(
                 f"batch {self._batch_id} was not written: a marker for this "
                 "batch id already exists (concurrent producer / batch-id "
@@ -161,22 +168,22 @@ class Tranquilizer:
             )
 
         for i, fut in enumerate(futures):
-            if i in accepted_idx:
+            reason = disposition[i]
+            if reason == _ACCEPTED:
                 self.sent_count += 1
                 fut.set_result(SendResult(sent=True))
+                continue
+            self.dropped_count += 1
+            if reason == _UNPARSEABLE:
+                self.dropped_unparseable += 1
+                msg = (
+                    f"event {i}: unparseable timestamp "
+                    f"(column {self.spec.timestamp_spec.column!r})"
+                )
             else:
-                self.dropped_count += 1
-                # name the actual cause (r14 code-review: every drop used
-                # to blame windowPeriod, even parse failures with the
-                # window disabled)
-                if i not in parse_ok_idx:
-                    msg = (
-                        f"event {i}: unparseable timestamp "
-                        f"(column {self.spec.timestamp_spec.column!r})"
-                    )
-                else:
-                    msg = f"event {i} outside windowPeriod {self.window_period}"
-                fut.set_exception(MessageDroppedException(msg))
+                self.dropped_window += 1
+                msg = f"event {i} outside windowPeriod {self.window_period}"
+            fut.set_exception(MessageDroppedException(msg))
 
     def close(self) -> None:
         self.flush()
