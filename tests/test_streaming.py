@@ -1293,7 +1293,31 @@ def test_compaction_chaos_kill_between_marker_and_delete(spark, tmp_path):
         assert got == want
 
 
-def test_segment_sink_crash_between_publish_and_marker(spark, tmp_path):
+def _batch(spark, rows, schema, route):
+    """One sink batch built two ways: ``"list"`` is a Python-list frame
+    (not local: the sink's Spark stage writer), ``"arrow"`` an Arrow-backed
+    local frame holding the same values (the sink's driver-side stage
+    writer, as a Tranquilizer flush hands over)."""
+    from pyspark.sql.conversion import LocalDataToArrowConversion
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    df = spark.createDataFrame(rows, schema)
+    if route == "arrow":
+        table = (
+            LocalDataToArrowConversion.convert(rows, df.schema, use_large_var_types=False)
+            if rows
+            else to_arrow_schema(df.schema).empty_table()
+        )
+        df = spark.createDataFrame(table, schema=df.schema)
+    assert df.isLocal() == (route == "arrow")
+    return df
+
+
+ROUTES = pytest.mark.parametrize("route", ["list", "arrow"])
+
+
+@ROUTES
+def test_segment_sink_crash_between_publish_and_marker(spark, tmp_path, route):
     """Retry after a crash that published data but not the marker: no dupes.
 
     This is the failure window where a naive append sink duplicates the
@@ -1302,9 +1326,11 @@ def test_segment_sink_crash_between_publish_and_marker(spark, tmp_path):
     import os
 
     sink = SegmentSink(str(tmp_path / "seg"), "wiki", "HOUR", replicants=2)
-    df = spark.createDataFrame(
+    df = _batch(
+        spark,
         [(dt.datetime(2024, 6, 1, 11, 5), "a"), (dt.datetime(2024, 6, 1, 11, 6), "b")],
         "ts timestamp, page string",
+        route,
     )
     assert sink.write_batch(df, 1) == 2
     # simulate the crash: data is published, marker vanishes
@@ -1314,14 +1340,15 @@ def test_segment_sink_crash_between_publish_and_marker(spark, tmp_path):
     assert sink.read(spark, replica=1).count() == 2
 
 
-def test_segment_sink_crash_between_replicas(spark, tmp_path):
+@ROUTES
+def test_segment_sink_crash_between_replicas(spark, tmp_path, route):
     """Retry after a crash mid-replica-publish heals the missing replica."""
     import glob
     import os
     import shutil
 
     sink = SegmentSink(str(tmp_path / "seg"), "wiki", "HOUR", replicants=2)
-    df = spark.createDataFrame([(dt.datetime(2024, 6, 1, 11, 5), "a")], "ts timestamp, page string")
+    df = _batch(spark, [(dt.datetime(2024, 6, 1, 11, 5), "a")], "ts timestamp, page string", route)
     sink.write_batch(df, 1)
     # simulate: replica 1 never published, marker never written
     shutil.rmtree(sink._ds_root(1))
@@ -1331,6 +1358,178 @@ def test_segment_sink_crash_between_replicas(spark, tmp_path):
     assert sink.read(spark, replica=1).count() == 1  # healed
     files0 = glob.glob(f"{sink._ds_root(0)}/**/*.parquet", recursive=True)
     assert len(files0) == 1
+
+
+def _sink_state(spark, sink):
+    """Everything a reader of the layout can see: per replica, the published
+    files (relative path, footer rows, footer Spark schema, the cluster
+    columns in file order); replica 0's committed snapshot (schema and
+    sorted rows, or None when nothing is committed; replicas publish links
+    to the same staged files); and the batch markers' row counts."""
+    import pyarrow.parquet as pq
+
+    state = {"markers": {}}
+    for bid in sorted(sink.committed_batch_ids()):
+        with open(sink._marker_path(bid)) as fh:
+            state["markers"][bid] = json.load(fh)["rows"]
+    for r in range(sink.replicants):
+        base = sink._ds_root(r)
+        files = []
+        for f in sink.committed_files(r):
+            pf = pq.ParquetFile(f)
+            meta = pf.metadata.metadata[b"org.apache.spark.sql.parquet.row.metadata"]
+            order = pf.read(columns=sink.cluster_by).to_pylist() if sink.cluster_by else None
+            files.append((os.path.relpath(f, base), pf.metadata.num_rows, json.loads(meta), order))
+        snap = None
+        if files and r == 0:
+            back = sink.read(spark, committed_only=True)
+            snap = (back.schema, sorted(map(repr, back.collect())))
+        state[r] = (files, snap)
+    return state
+
+
+_LAYOUT_ROWS = [
+    (dt.datetime(2024, 6, 1, 11, 50 + i % 10, i), i % 7 - 3, f"page{i % 5}" if i % 11 else None, i * 0.5)
+    for i in range(40)
+] + [
+    (dt.datetime(2024, 6, 1, 12, 10, 1), 1, "future", 0.0),  # outside PT10M
+    (dt.datetime(2024, 6, 1, 11, 49, 59), 2, "late", 0.0),
+]
+_LAYOUT_SCHEMA = "ts timestamp, uid long, page string, added double"
+
+
+def _type_mix(spark):
+    """12 columns of mixed Spark types, one row of values and one of nulls
+    (a null shard key goes to Spark's default partition directory)."""
+    import decimal
+
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    ddl = ("ts timestamp, v void, i int, s short, d decimal(10,2), t timestamp, "
+           "tn timestamp_ntz, ar array<int>, m map<string,int>, "
+           "st struct<x:int,y:string>, dd date")
+    fields = spark.createDataFrame([], ddl).schema.fields
+    # a varchar column as a table schema carries it: string + type metadata
+    varchar = StructField("vc", StringType(), True, {"__CHAR_VARCHAR_TYPE_STRING": "varchar(10)"})
+    rows = [
+        (dt.datetime(2024, 6, 1, 11, 5), None, 1, 2, decimal.Decimal("3.50"),
+         dt.datetime(1500, 1, 1), dt.datetime(2024, 1, 1, 3), [1, None], {"k": 1},
+         (1, "z"), dt.date(2024, 1, 2), "abc"),
+        (dt.datetime(2024, 6, 1, 12, 5), None, None, None, None, None, None, None,
+         None, None, None, None),
+    ]
+    return rows, StructType(fields + [varchar])
+
+
+_PARITY_CASES = {
+    "long_key": dict(rows=_LAYOUT_ROWS, schema=_LAYOUT_SCHEMA, shard_key="uid",
+                     cluster_by=["page"], window_period="PT10M"),
+    "string_key": dict(rows=_LAYOUT_ROWS, schema=_LAYOUT_SCHEMA, shard_key="page",
+                       cluster_by=["uid"], window_period="PT10M"),
+    "empty": dict(rows=[], schema=_LAYOUT_SCHEMA, shard_key="uid"),
+    "type_mix": dict(types=True, shard_key="i"),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_PARITY_CASES))
+def test_segment_sink_stage_writers_agree(spark, tmp_path, case):
+    """The driver-side stage writer (local batch) and the Spark stage writer
+    (distributed batch) publish the same layout: same file paths, rows per
+    file, footer schema, marker rows, snapshot schema and rows, and in-file
+    order on the cluster columns."""
+    opts = dict(_PARITY_CASES[case])
+    rows, schema = _type_mix(spark) if opts.pop("types", False) else (opts.pop("rows"), opts.pop("schema"))
+    states = []
+    for route in ("list", "arrow"):
+        sink = SegmentSink(
+            str(tmp_path / route), "wiki", "HOUR", partitions=3, replicants=2,
+            clock=lambda: NOW, **opts,
+        )
+        written = sink.write_batch(_batch(spark, rows, schema, route), batch_id=1)
+        states.append((written, _sink_state(spark, sink)))
+    assert states[0] == states[1]
+    written, state = states[0]
+    assert written == sum(n for _, n, _, _ in state[0][0]) == state["markers"][1]
+    if case == "empty":
+        assert written == 0 and state[0] == ([], None)
+    else:
+        assert written > 0 and len(state[0][0]) > 1
+
+
+def test_compact_merges_files_of_both_stage_writers(spark, tmp_path):
+    """compact() over a layout holding files of both stage writers equals
+    compact() over the same batches written by the Spark writer alone."""
+    from tranquility_spark.streaming.sink import compact
+
+    first, second = _LAYOUT_ROWS[:20], _LAYOUT_ROWS[20:]
+    states = []
+    for routes in (("list", "list"), ("list", "arrow")):
+        sink = SegmentSink(str(tmp_path / "-".join(routes)), "wiki", "HOUR",
+                           shard_key="uid", cluster_by=["page"])
+        for bid, (part, route) in enumerate(zip((first, second), routes), 1):
+            sink.write_batch(_batch(spark, part, _LAYOUT_SCHEMA, route), bid)
+        assert compact(sink, spark) > 0
+        states.append(_sink_state(spark, sink))
+    assert states[0] == states[1]
+    # both batches wrote every (g, p) of the 11:00 bucket: each was merged
+    merged = [f for f, *_ in states[0][0][0] if "g=2024-06-01-11-00" in f]
+    assert merged and all(os.path.basename(f).startswith("compact-") for f in merged)
+
+
+def test_local_batch_stages_without_spark_write_job(spark, tmp_path, monkeypatch):
+    """A local batch costs the sink one Spark job (its sorted collect) and
+    no Spark write; a distributed batch still shuffles on (g, p) before the
+    partitioned Spark write."""
+    import uuid
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    plans = []
+    real_parquet = DataFrameWriter.parquet
+
+    def parquet(self, path, *a, **k):
+        plans.append(self._df._jdf.queryExecution().executedPlan().toString())
+        return real_parquet(self, path, *a, **k)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    sc = spark.sparkContext
+    jobs = {}
+    for route in ("arrow", "list"):
+        sink = SegmentSink(str(tmp_path / route), "wiki", "HOUR", partitions=3,
+                           shard_key="uid", cluster_by=["page"])
+        df = _batch(spark, _LAYOUT_ROWS, _LAYOUT_SCHEMA, route)
+        group = f"sink-{route}-{uuid.uuid4().hex}"
+        with _job_group(sc, group):
+            assert sink.write_batch(df, 1) == 42
+        jobs[route] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs["arrow"] == 1
+    (plan,) = plans  # only the distributed batch reached the Spark writer
+    assert "Exchange hashpartitioning(g" in plan, plan
+
+
+def test_tranquilizer_raises_when_sink_window_drops_accepted_events(spark, tmp_path):
+    """One window decision per push: a sink applying its own window with a
+    clock that moved on since the flush drops an event the flush accepted.
+    The flush must fail loudly, not acknowledge it as sent — and the
+    builder's Tranquilizer hands its sink no window at all."""
+    import itertools
+
+    from tranquility_spark.beams import Beams
+
+    calls = itertools.count()
+    clock = lambda: NOW + dt.timedelta(minutes=6) * next(calls)  # noqa: E731
+    sink = SegmentSink(str(tmp_path / "seg"), "wiki", "HOUR", window_period="PT10M", clock=clock)
+    t = Tranquilizer(spark, _spec(), sink, window_period="PT10M", clock=clock)
+    edge = t.send(_ev("2024-06-01T11:52:00"))  # in at 12:00, out at 12:06
+    fresh = t.send(_ev("2024-06-01T12:01:00"))
+    with pytest.raises(MessageDroppedException, match="wrote 1 of 2"):
+        t.flush()
+    assert all(isinstance(f.exception(), MessageDroppedException) for f in (edge, fresh))
+    assert t.sent_count == 0
+
+    builder = Beams.builder().tuning(window_period="PT10M").sink_root(str(tmp_path / "b"))
+    assert builder.build_tranquilizer(spark).beam.window_period is None
+    assert builder.build_beam().window_period == "PT10M"
 
 
 def test_tranquilizer_resumes_batch_ids_after_restart(spark, tmp_path):
@@ -2974,7 +3173,8 @@ def test_streamed_simhash_index_serves_full_pairs(spark, sf_dir, tmp_path):
 # ---------------------------------------------------------------------------
 
 
-def test_window_period_retry_drift_clears_stale_buckets(spark, tmp_path):
+@ROUTES
+def test_window_period_retry_drift_clears_stale_buckets(spark, tmp_path, route):
     """r14 code-review: with window_period, a retried batch re-filters at a
     LATER clock and may stage FEWER buckets — the crashed attempt's file in
     a bucket the retry no longer writes must NOT become committed-visible
@@ -2989,12 +3189,14 @@ def test_window_period_retry_drift_clears_stale_buckets(spark, tmp_path):
         str(tmp_path / "seg"), "wiki", "HOUR", window_period="PT10M",
         clock=lambda: clock["now"],
     )
-    df = spark.createDataFrame(
+    df = _batch(
+        spark,
         [
             (dt.datetime(2024, 6, 1, 11, 55, 0), "old_bucket"),  # 5m old at t0
             (dt.datetime(2024, 6, 1, 12, 1, 0), "new_bucket"),
         ],
         "ts timestamp, page string",
+        route,
     )
     # attempt 1: crash at the marker commit (publish already happened)
     real_link, real_rename = os.link, os.rename

@@ -140,8 +140,7 @@ class Beams:
             granularity_spec=self._gran,
         )
 
-    def build_beam(self) -> SegmentSink:
-        """Reference terminal ``buildBeam()`` → the sink."""
+    def _sink(self, window_period: Optional[str]) -> SegmentSink:
         return SegmentSink(
             self._root,
             self._datasource,
@@ -150,16 +149,25 @@ class Beams:
             replicants=self._replicants,
             shard_key=self._shard_key,
             ts_col=self._ts.output,
-            window_period=self._window_period,
+            window_period=window_period,
             clock=self._clock,
         )
 
+    def build_beam(self) -> SegmentSink:
+        """Reference terminal ``buildBeam()`` → the sink, which applies the
+        window period itself (the only window decision on a streaming
+        path)."""
+        return self._sink(self._window_period)
+
     def build_tranquilizer(self, spark: SparkSession) -> Tranquilizer:
-        """Reference terminal ``buildTranquilizer()`` → the send API."""
+        """Reference terminal ``buildTranquilizer()`` → the send API. The
+        Tranquilizer makes the one window decision per event; its sink has
+        none, because a second decision at write time (a later wall clock)
+        could drop an event already acknowledged as sent."""
         return Tranquilizer(
             spark,
             self.spec(),
-            self.build_beam(),
+            self._sink(None),
             max_batch_size=self._max_batch_size,
             window_period=self._window_period,
             clock=self._clock,

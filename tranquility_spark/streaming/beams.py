@@ -10,7 +10,7 @@ Seq of events; partition fan-out (D1) becomes a shard-column split and
 replication (D3) a fan-out write. These exist for API parity and for tests
 mirroring ``ClusteredBeamTest`` — inside a streaming query the same routing is
 expressed declaratively (``repartition`` + ``partitionBy``), which is what
-``SegmentSink`` does.
+``SegmentSink`` does with a distributed batch.
 """
 
 from __future__ import annotations

@@ -23,16 +23,25 @@ lifecycle, S6) — with a ``foreachBatch`` writer producing
   schemas and are read back with ``mergeSchema`` (next segment bucket gets the
   union — the reference's "next segment" rule, relaxed to "next batch").
 
-Scale: one ``partitionBy(g, p)`` write per micro-batch — no driver-side row
-handling. The commit is two-phase: stage → deterministic-name publish →
-marker, so a crash at ANY point leaves a retry idempotent (see
-``write_batch``). The publish loop touches one file per (bucket, shard) per
-batch; on an object store it becomes a manifest/metadata commit, same shape.
+Scale: the stage writer is chosen by where the batch's rows already are.
+A batch whose rows sit in driver memory (``df.isLocal()``: the Arrow-backed
+frame a ``Tranquilizer`` flush hands over, at most one flush of rows) is
+collected once, sorted on (g, p), and each (g, p) slice is written with
+pyarrow — no shuffle and no Spark write job. Every other batch (streaming
+``foreachBatch`` frames, ``MultiDatasourceSink`` slices, list-built frames)
+takes one ``repartition(g, p)`` + ``partitionBy(g, p)`` Spark write, with no
+driver-side row handling. Both writers produce the same staged layout and
+footer schema, and everything after staging is shared. The commit is
+two-phase: stage → deterministic-name publish → marker, so a crash at ANY
+point leaves a retry idempotent (see ``write_batch``). The publish loop
+touches one file per (bucket, shard) per batch; on an object store it
+becomes a manifest/metadata commit, same shape.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
+import itertools
 import json
 import os
 import re
@@ -43,6 +52,7 @@ from typing import Callable, Optional, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from tranquility_spark.operators.partitioning import portable_shard
 from tranquility_spark.operators.window_filter import two_sided_window_filter
@@ -295,32 +305,19 @@ class SegmentSink:
             else F.lit(0)
         )
         out = out.withColumn("p", shard)
-        # co-locate each (bucket, shard) in one task before partitionBy —
-        # without this every upstream partition writes a file into every
-        # bucket directory (buckets × tasks small files; measured 8× slower
-        # at 720 buckets). This is the D2 rollup-aware layout applied to the
-        # write path; one file per (g, p) per batch.
-        out = out.repartition(F.col("g"), F.col("p"))
-        if self.cluster_by:
-            missing = [c for c in self.cluster_by if c not in out.columns]
-            if missing:
-                # loud, not silently-unsorted: a layout whose files CLAIM
-                # the clustering contract but interleave values would make
-                # every footer range wide and every skip impossible — the
-                # misconfiguration must surface at ingest, not as a slow
-                # query months later
-                raise ValueError(
-                    f"cluster_by columns missing from batch: {missing}"
-                )
-            # per-task sort, no extra shuffle: rows of each (g, p) are
-            # already co-located, partitionBy splits them into one file
-            # per (g, p), and the leading (g, p) sort keys keep each
-            # file's rows contiguous and ordered on the cluster columns
-            out = out.sortWithinPartitions("g", "p", *self.cluster_by)
+        missing = [c for c in self.cluster_by if c not in out.columns]
+        if missing:
+            # loud, not silently-unsorted: a layout whose files CLAIM the
+            # clustering contract but interleave values would make every
+            # footer range wide and every skip impossible — the
+            # misconfiguration must surface at ingest, not as a slow query
+            # months later
+            raise ValueError(f"cluster_by columns missing from batch: {missing}")
 
-        # Two-phase commit. Phase 1: one Spark job writes the batch into a
-        # batch-scoped STAGING dir (restarted from scratch on retry — a
-        # half-written staging dir is never visible). Phase 2: publish each
+        # Two-phase commit. Phase 1 writes the batch into a batch-scoped
+        # STAGING dir as one file per (g, p), rows sorted on the cluster
+        # columns (restarted from scratch on retry — a half-written staging
+        # dir is never visible). Phase 2: publish each
         # staged file into the live tree under a DETERMINISTIC name
         # ({batch}-{seq}.parquet), so a retry that crashed mid-publish
         # overwrites its own partial work instead of appending duplicates —
@@ -349,7 +346,26 @@ class SegmentSink:
             shutil.rmtree(staging)
         n = 0
         files_by_part: list[tuple[str, list[str]]] = []
-        out.write.mode("overwrite").partitionBy("g", "p").parquet(staging)
+        # Phase 1 has two writers, chosen by where the rows already are. A
+        # local batch (rows in driver memory, at most one flush) is staged
+        # by pyarrow: one collect, no shuffle, no Hadoop committer — the
+        # Spark write's fixed cost per (g, p) file dominated a small batch.
+        # A distributed batch must not be pulled to the driver, so it keeps
+        # the Spark write.
+        if df.isLocal():
+            self._stage_local(out, staging)
+        else:
+            # co-locate each (bucket, shard) in one task before partitionBy
+            # — without this every upstream partition writes a file into
+            # every bucket directory (buckets × tasks small files; measured
+            # 8× slower at 720 buckets). This is the D2 rollup-aware layout
+            # applied to the write path; one file per (g, p) per batch. The
+            # per-task sort needs no extra shuffle, and the leading (g, p)
+            # keys keep each file's rows ordered on the cluster columns.
+            out = out.repartition(F.col("g"), F.col("p"))
+            if self.cluster_by:
+                out = out.sortWithinPartitions("g", "p", *self.cluster_by)
+            out.write.mode("overwrite").partitionBy("g", "p").parquet(staging)
         for dirpath, _dirs, files in sorted(os.walk(staging)):
             parquets = sorted(f for f in files if f.endswith(".parquet"))
             if parquets:
@@ -399,6 +415,40 @@ class SegmentSink:
         else:
             os.remove(tmp)
         return n
+
+    def _stage_local(self, layout: DataFrame, staging: str) -> None:
+        """Stage a driver-local batch as Spark's ``partitionBy("g", "p")``
+        write would: ``g=<g>/p=<p>/`` directories, one parquet file each,
+        without the partition columns. One sorted collect makes every
+        (g, p) a contiguous slice of the table. Each file carries the two
+        footer keys Spark's own writer adds: the row metadata (the data
+        columns' Spark schema, so e.g. a void or short column reads back as
+        written, not as its parquet physical type) and the writer version
+        (so a reader's rebase-mode setting leaves pre-1582 datetimes alone,
+        as it does in Spark's own files)."""
+        import pyarrow.parquet as pq
+
+        table = (
+            layout.coalesce(1)
+            .sortWithinPartitions("g", "p", *self.cluster_by)
+            .toArrow()
+        )
+        schema = StructType([f for f in layout.schema.fields if f.name not in ("g", "p")])
+        data = table.drop_columns(["g", "p"]).replace_schema_metadata({
+            "org.apache.spark.version": layout.sparkSession.version,
+            "org.apache.spark.sql.parquet.row.metadata": schema.json(),
+        })
+        keys = zip(table.column("g").to_pylist(), table.column("p").to_pylist())
+        start = 0
+        for key, run in itertools.groupby(keys):
+            rows = sum(1 for _ in run)
+            # a null key is Spark's default partition; no (g, p) value
+            # holds a character Spark would escape in a directory name
+            g, p = ("__HIVE_DEFAULT_PARTITION__" if v is None else v for v in key)
+            part = os.path.join(staging, f"g={g}", f"p={p}")
+            os.makedirs(part)
+            pq.write_table(data.slice(start, rows), os.path.join(part, "part-00000.parquet"))
+            start += rows
 
     # -- streaming attach ----------------------------------------------------
 

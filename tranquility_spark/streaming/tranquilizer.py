@@ -14,7 +14,11 @@ in one plan, and collects it once with ``toArrow()``. The futures resolve
 from the status column: True, or ``MessageDroppedException`` naming the
 cause, counted in ``dropped_unparseable`` / ``dropped_window``. The beam
 (``SegmentSink.write_batch`` or ``MemoryBeam``) receives the accepted slice
-of that same Arrow table, so nothing is evaluated twice.
+of that same Arrow table, so nothing is evaluated twice. That batch is a
+driver-local frame, so ``SegmentSink`` stages it on the driver with pyarrow
+(one sorted collect, one parquet file per bucket and shard) instead of a
+shuffle and a Spark write job. A flush succeeds only if the beam wrote
+every accepted event.
 
 Flushes are synchronous and deterministic (the default lingerMillis=0 was
 latency-biased anyway); ``maxPendingBatches`` back-pressure is therefore a
@@ -155,16 +159,18 @@ class Tranquilizer:
             written = self.beam.write_batch(batch, self._batch_id)
         else:
             written = self.beam.send_all(batch)
-        if accepted.num_rows > 0 and written == 0:
+        if written != accepted.num_rows:
             # the sink SIGNALS a batch-id collision (a marker already
             # committed under this id — the misconfigured double-producer
-            # case) by returning 0; acknowledging these events as sent
-            # would be silent data loss
+            # case) by returning 0, and a sink with its own window filter
+            # may drop rows this flush accepted; acknowledging those
+            # events as sent would be silent data loss
             raise MessageDroppedException(
-                f"batch {self._batch_id} was not written: a marker for this "
+                f"batch {self._batch_id}: the beam wrote {written} of "
+                f"{accepted.num_rows} accepted events — a marker for this "
                 "batch id already exists (concurrent producer / batch-id "
-                "collision), or the sink's own window filter rejected the "
-                "whole batch — events were NOT delivered"
+                "collision), or the sink's own window filter dropped rows "
+                "— the batch was NOT delivered whole"
             )
 
         for i, fut in enumerate(futures):
