@@ -393,19 +393,16 @@ def test_chunk_dedup_conservation(spark, sf_dir):
 def test_driver_window_rotation_invariants():
     """Structural guards for the certification machinery (round-4/5
     lessons): every uncertified key must occupy the driver's 50-slot
-    window (>50 uncertified would silently push some past certification —
-    use _DEFER_TO_NEXT_WINDOW), and the ledger may only name real keys."""
-    from tranquility_spark.catalog import CATALOG, _CERTIFIED, _DEFER_TO_NEXT_WINDOW
+    window (>50 uncertified would silently push some past certification),
+    and the ledger may only name real keys."""
+    from tranquility_spark.catalog import CATALOG, _CERTIFIED
 
     keys = list(CATALOG.keys())
     window = set(keys[:50])
-    uncertified = [
-        k for k in keys if k not in _CERTIFIED and k not in _DEFER_TO_NEXT_WINDOW
-    ]
+    uncertified = [k for k in keys if k not in _CERTIFIED]
     outside = [k for k in uncertified if k not in window]
     assert not outside, f"uncertified keys pushed out of the driver window: {outside}"
     assert set(_CERTIFIED) <= set(keys), sorted(set(_CERTIFIED) - set(keys))
-    assert set(_DEFER_TO_NEXT_WINDOW) <= set(keys)
     # the explicit window list too: _rotate_driver_window silently skips
     # names not in CATALOG, so a typo'd entry would lose its lead slot
     # with no error anywhere else

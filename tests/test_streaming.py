@@ -1476,6 +1476,47 @@ def test_compact_merges_files_of_both_stage_writers(spark, tmp_path):
     assert merged and all(os.path.basename(f).startswith("compact-") for f in merged)
 
 
+def test_sink_commits_without_hardlinks(spark, tmp_path, monkeypatch):
+    """On a filesystem without hardlinks every link of the commit protocol
+    takes its fallback: the batch lock an O_EXCL create, the publish a
+    copy, the batch and compaction markers a rename. Batches of both stage
+    writers, a replay and a compaction still commit exactly: same snapshot
+    rows, every marker present, the replay a no-op, no tmp file left and
+    the batch lock released."""
+    import errno
+    import glob
+
+    import tranquility_spark.streaming.sink as sink_mod
+    from tranquility_spark.streaming.sink import compact
+
+    def no_link(src, dst):
+        raise OSError(errno.EPERM, "hardlinks not supported", str(dst))
+
+    monkeypatch.setattr(sink_mod.os, "link", no_link)
+    root = str(tmp_path / "seg")
+    sink = SegmentSink(root, "wiki", "HOUR", shard_key="uid", replicants=2)
+    first, second = _LAYOUT_ROWS[:20], _LAYOUT_ROWS[20:]
+    for bid, (rows, route) in enumerate(zip((first, second), ("list", "arrow")), 1):
+        assert sink.write_batch(_batch(spark, rows, _LAYOUT_SCHEMA, route), bid) == len(rows)
+    assert sink.write_batch(_batch(spark, first, _LAYOUT_SCHEMA, "list"), 1) == 0
+
+    def snapshot(replica):
+        back = sink.read(spark, replica=replica, committed_only=True)
+        return sorted(map(repr, back.select("ts", "uid", "page", "added").collect()))
+
+    want = sorted(map(repr, spark.createDataFrame(_LAYOUT_ROWS, _LAYOUT_SCHEMA).collect()))
+    assert snapshot(0) == snapshot(1) == want
+    assert compact(sink, spark) > 0
+    assert snapshot(0) == want
+    assert sink.committed_batch_ids() == {1, 2}
+    assert len(sink.committed_compactions(0)) == 1
+    published = glob.glob(f"{root}/ds=wiki/**/*.parquet", recursive=True)
+    assert published and all(os.stat(f).st_nlink == 1 for f in published)  # copies
+    assert not glob.glob(f"{root}/**/*.tmp.*", recursive=True)
+    assert not glob.glob(f"{root}/_batches/*.lock")
+    assert not any(lock.startswith(root) for lock in SegmentSink._held_locks)
+
+
 def test_local_batch_stages_without_spark_write_job(spark, tmp_path, monkeypatch):
     """A local batch costs the sink one Spark job (its sorted collect) and
     no Spark write; a distributed batch still shuffles on (g, p) before the

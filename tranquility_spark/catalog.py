@@ -1947,22 +1947,12 @@ _R18_DRIVER_WINDOW = [
 def _rotate_driver_window() -> None:
     lead = [k for k in _R18_DRIVER_WINDOW if k in CATALOG]
     # anything registered after this snapshot auto-joins the window
-    lead += [
-        k
-        for k in CATALOG
-        if k not in lead and k not in _CERTIFIED and k not in _DEFER_TO_NEXT_WINDOW
-    ]
+    lead += [k for k in CATALOG if k not in lead and k not in _CERTIFIED]
     ordered = {k: CATALOG[k] for k in lead}
     for k, v in list(CATALOG.items()):
         ordered.setdefault(k, v)
     CATALOG.clear()
     CATALOG.update(ordered)
-
-
-# Overflow valve: if more than 50 uncertified keys ever accumulate, park the
-# excess here so they don't push window entries past slot 50. Empty as of r05
-# (the r03-deferred ten now LEAD the window above).
-_DEFER_TO_NEXT_WINDOW: frozenset[str] = frozenset()
 
 
 # Every key with a green (hash-match) driver CORRECTNESS row:

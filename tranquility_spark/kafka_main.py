@@ -40,7 +40,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from tranquility_spark.sources.kafka import kafka_stream, parse_kafka_batch
 from tranquility_spark.specs import parse_druid_spec
-from tranquility_spark.streaming.pipeline import stream_rollup
 from tranquility_spark.streaming.sink import MultiDatasourceSink, SegmentSink
 
 

@@ -171,33 +171,6 @@ def stream_rollup(
     )
 
 
-def start_ingest(
-    stream_df: DataFrame,
-    spec: IngestSpec,
-    sink,
-    checkpoint: str,
-    watermark: str = "10 minutes",
-    output_mode: str = "append",
-    trigger: Optional[dict] = None,
-):
-    """Wire stream → rollup → SegmentSink and start the query.
-
-    ``output_mode='append'`` emits each (bucket, rollup-key) exactly once when
-    the watermark closes its window — the reference's handoff (W4) — and the
-    sink's batch-id marker makes replays idempotent (W5: exactly-once, strictly
-    stronger than the reference's at-least-once).
-    """
-    rolled = stream_rollup(stream_df, spec, watermark=watermark)
-    writer = (
-        rolled.writeStream.outputMode(output_mode)
-        .foreachBatch(sink.foreach_batch())
-        .option("checkpointLocation", checkpoint)
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
-
-
 def stream_exact_dedup(
     stream_df: DataFrame,
     text_col: str = "text",

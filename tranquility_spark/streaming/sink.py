@@ -31,11 +31,17 @@ pyarrow — no shuffle and no Spark write job. Every other batch (streaming
 ``foreachBatch`` frames, ``MultiDatasourceSink`` slices, list-built frames)
 takes one ``repartition(g, p)`` + ``partitionBy(g, p)`` Spark write, with no
 driver-side row handling. Both writers produce the same staged layout and
-footer schema, and everything after staging is shared. The commit is
-two-phase: stage → deterministic-name publish → marker, so a crash at ANY
-point leaves a retry idempotent (see ``write_batch``). The publish loop
-touches one file per (bucket, shard) per batch; on an object store it
-becomes a manifest/metadata commit, same shape.
+footer schema, and everything after staging is shared.
+
+Commit protocol: stage → deterministic-name publish → footer row count →
+exclusive marker, so a crash at ANY point leaves a retry idempotent.
+``write_batch`` and ``compact`` run the same core — ``_stage_with_spark``,
+``_staged_files`` (the deterministic names), ``_link_or_copy`` (the
+publish), ``_footer_rows`` and ``_commit_marker`` — and differ only in
+policy: what a lost marker race means and what must be cleared or
+restored around the publish. The publish touches one file per (bucket,
+shard) per batch; on an object store it becomes a manifest/metadata
+commit, same shape.
 """
 
 from __future__ import annotations
@@ -59,6 +65,87 @@ from tranquility_spark.operators.window_filter import two_sided_window_filter
 from tranquility_spark.specs import Granularity
 
 Clock = Callable[[], _dt.datetime]
+
+
+# -- the commit core shared by write_batch and compact ----------------------
+
+
+def _stage_with_spark(df: DataFrame, staging: str, cluster_by: Sequence[str]) -> None:
+    """Stage ``df`` as Spark's partitioned write: one ``g=<g>/p=<p>/``
+    directory per key. The caller's partitioning decides how many files
+    each directory gets; the per-task sort needs no extra shuffle, and the
+    leading (g, p) keys keep each file's rows ordered on the cluster
+    columns."""
+    if cluster_by:
+        df = df.sortWithinPartitions("g", "p", *cluster_by)
+    df.write.mode("overwrite").partitionBy("g", "p").parquet(staging)
+
+
+def _staged_files(staging: str, prefix: str) -> list[tuple[str, str]]:
+    """``(rel, src)`` for every parquet file of a staging dir. ``rel`` is
+    the file's deterministic published name, ``<g=…/p=…>/<prefix>-<seq>
+    .parquet`` with seq counting its directory's files in sorted order: a
+    retry that stages the same rows publishes over its own partial work
+    instead of appending duplicates."""
+    out = []
+    for dirpath, _dirs, files in sorted(os.walk(staging)):
+        rel_dir = os.path.relpath(dirpath, staging)
+        for seq, name in enumerate(sorted(f for f in files if f.endswith(".parquet"))):
+            rel = os.path.normpath(os.path.join(rel_dir, f"{prefix}-{seq}.parquet"))
+            out.append((rel, os.path.join(dirpath, name)))
+    return out
+
+
+def _link_or_copy(src: str, dst: str) -> None:
+    """Publish ``src`` as ``dst``, replacing any file of that name. A
+    hardlink is a metadata op (measured 3× faster than copying on a
+    720-bucket backfill); the copy is the cross-device / no-hardlink
+    fallback."""
+    os.makedirs(os.path.dirname(dst), exist_ok=True)
+    if os.path.exists(dst):
+        os.remove(dst)
+    try:
+        os.link(src, dst)
+    except OSError:
+        shutil.copyfile(src, dst)
+
+
+def _footer_rows(paths) -> int:
+    """Row count of parquet files from their footers: a metadata read, no
+    recompute of the staged frame."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.ParquetFile(p).metadata.num_rows for p in paths)
+
+
+def _commit_marker(path: str, payload: dict) -> bool:
+    """Commit ``payload`` as the marker ``path``; False when a concurrent
+    producer's marker is already there.
+
+    Write-then-commit, so a crash mid-write never leaves a marker that
+    would make half-written work look committed. The tmp name is
+    pid-unique, so two producers cannot clobber each other's payload
+    before the commit, and the commit is an exclusive link: a plain rename
+    would silently overwrite the winner's marker. A filesystem without
+    hardlinks falls back to the atomic rename, which keeps crash atomicity
+    but loses the concurrent-producer guard.
+    """
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = f"{path}.tmp.{os.getpid()}"
+    with open(tmp, "w") as fh:
+        json.dump(payload, fh)
+    try:
+        os.link(tmp, path)
+    except FileExistsError:
+        os.remove(tmp)
+        return False
+    except OSError:
+        os.rename(tmp, path)
+    else:
+        # apart from the link's try: a failed tmp cleanup must never fall
+        # into the rename fallback and re-commit over the marker just made
+        os.remove(tmp)
+    return True
 
 
 class SegmentSink:
@@ -88,7 +175,7 @@ class SegmentSink:
             # a finer segment granularity would silently coalesce 60+
             # logical buckets per directory while before=-scoped
             # compaction and bucket listings operated on the coarser
-            # string — loud, not silently-coarsened (r14 code-review).
+            # string — loud, not silently-coarsened.
             # (Druid's own segmentGranularity floor is MINUTE-scale too;
             # sub-minute segments are an anti-pattern at any size.)
             raise ValueError(
@@ -103,13 +190,13 @@ class SegmentSink:
         self.window_period = window_period
         self.clock = clock
         self.latest_close_time = latest_close_time
-        # Secondary clustering (r14): Druid's range partitionsSpec
+        # Secondary clustering: Druid's range partitionsSpec
         # (``partitionsSpec: single_dim/range`` on native ingest/compaction,
         # public Druid docs) — rows inside each (bucket, shard) file are
         # kept SORTED on these dimensions, so the parquet footers carry
         # tight min/max and a range predicate on them skips row groups at
         # read time (sources/clustered.py holds the standalone layout and
-        # the footer-stats probe; SCALE.md r14 the measured payoff).
+        # the footer-stats probe; SCALE.md the measured payoff).
         # write_batch sorts each micro-batch file; compact() range-splits
         # and re-sorts whole buckets, so the clustering IMPROVES as
         # segments close — exactly Druid compaction's role.
@@ -125,8 +212,8 @@ class SegmentSink:
         return f"{self.root}/_batches/{self.datasource}-{batch_id}"
 
     # process-local registry of batch locks currently HELD by live threads
-    # of this process (r15 self-review: the pid recorded in the lock file
-    # cannot distinguish a sibling live thread from a leaked lock of a
+    # of this process: the pid recorded in the lock file cannot
+    # distinguish a sibling live thread from a leaked lock of a
     # crashed prior attempt — without this set, two threads of one driver
     # would classify each other's live locks as 'own pid == stale', steal
     # them, and re-enable the sweep-deletes-winner's-files corruption the
@@ -137,7 +224,7 @@ class SegmentSink:
     def _acquire_batch_lock(self, marker: str) -> str | None:
         """Exclusive in-progress lock for one batch id's write protocol.
 
-        ADVICE r14 (medium): ``write_batch`` sweeps every file its batch id
+        ``write_batch`` sweeps every file its batch id
         ever published BEFORE committing the marker — two live producers
         racing the same id could both pass the top marker check, and the
         loser's sweep would delete files the winner commits moments later
@@ -246,10 +333,10 @@ class SegmentSink:
         marker = self._marker_path(batch_id)
         if os.path.exists(marker):
             return 0
-        # exclusivity BEFORE the sweep (ADVICE r14): a live concurrent
+        # exclusivity BEFORE the sweep: a live concurrent
         # producer of the same batch id must not be able to delete files
         # this run is about to commit. A blocked producer WAITS rather
-        # than skipping (r15 self-review): returning 0 on a liveness
+        # than skipping: returning 0 on a liveness
         # snapshot would let this producer's checkpoint advance past a
         # batch the lock holder then fails to commit — the batch would be
         # lost with no error anywhere, where the pre-lock code survived
@@ -289,10 +376,10 @@ class SegmentSink:
 
         clash = [c for c in ("g", "p") if c in out.columns]
         if clash:
-            # loud, not silent (r14 code-review, the cluster_by guard's
-            # sibling): withColumn would REPLACE the user's column with
-            # the bucket/shard value and partitionBy would consume it as
-            # a directory key — the original values gone from the layout
+            # loud, not silent (the cluster_by guard's sibling): withColumn
+            # would REPLACE the user's column with the bucket/shard value
+            # and partitionBy would consume it as a directory key — the
+            # original values gone from the layout
             raise ValueError(
                 f"batch columns {clash} collide with the sink's reserved "
                 "bucket/shard columns ('g', 'p') — rename them upstream"
@@ -317,22 +404,20 @@ class SegmentSink:
         # Two-phase commit. Phase 1 writes the batch into a batch-scoped
         # STAGING dir as one file per (g, p), rows sorted on the cluster
         # columns (restarted from scratch on retry — a half-written staging
-        # dir is never visible). Phase 2: publish each
-        # staged file into the live tree under a DETERMINISTIC name
-        # ({batch}-{seq}.parquet), so a retry that crashed mid-publish
-        # overwrites its own partial work instead of appending duplicates —
-        # then the marker commits the batch. Without staging, a crash between
-        # the data write and the marker write would duplicate the batch on
-        # retry (append mode), and a crash between replica writes would
+        # dir is never visible). Phase 2 publishes each staged file into
+        # every replica under its deterministic name, then the marker
+        # commits the batch. Without staging, a crash between the data
+        # write and the marker write would duplicate the batch on retry
+        # (append mode), and a crash between replica writes would
         # duplicate replica 0.
-        # clear EVERY file this batch id ever published (r14 code-review):
-        # deterministic names only overwrite partial work in buckets the
-        # retry writes AGAIN — with a wall clock (window_period,
-        # clock=None) the retry re-filters at a LATER now and may stage
-        # FEWER buckets, so a crashed attempt's file in a bucket the
-        # retry no longer produces would become committed-visible once
-        # the marker lands, exposing rows the committed batch filtered
-        # out. The batch id owns its files; sweep them all first.
+        # Clear EVERY file this batch id ever published: deterministic
+        # names only overwrite partial work in buckets the retry writes
+        # AGAIN — with a wall clock (window_period, clock=None) the retry
+        # re-filters at a LATER now and may stage FEWER buckets, so a
+        # crashed attempt's file in a bucket the retry no longer produces
+        # would become committed-visible once the marker lands, exposing
+        # rows the committed batch filtered out. The batch id owns its
+        # files; sweep them all first.
         for r in range(self.replicants):
             root_r = self._ds_root(r)
             if not os.path.isdir(root_r):
@@ -344,8 +429,6 @@ class SegmentSink:
         staging = f"{self.root}/_staging/{self.datasource}-{batch_id}"
         if os.path.isdir(staging):
             shutil.rmtree(staging)
-        n = 0
-        files_by_part: list[tuple[str, list[str]]] = []
         # Phase 1 has two writers, chosen by where the rows already are. A
         # local batch (rows in driver memory, at most one flush) is staged
         # by pyarrow: one collect, no shuffle, no Hadoop committer — the
@@ -359,61 +442,20 @@ class SegmentSink:
             # — without this every upstream partition writes a file into
             # every bucket directory (buckets × tasks small files; measured
             # 8× slower at 720 buckets). This is the D2 rollup-aware layout
-            # applied to the write path; one file per (g, p) per batch. The
-            # per-task sort needs no extra shuffle, and the leading (g, p)
-            # keys keep each file's rows ordered on the cluster columns.
+            # applied to the write path; one file per (g, p) per batch.
             out = out.repartition(F.col("g"), F.col("p"))
-            if self.cluster_by:
-                out = out.sortWithinPartitions("g", "p", *self.cluster_by)
-            out.write.mode("overwrite").partitionBy("g", "p").parquet(staging)
-        for dirpath, _dirs, files in sorted(os.walk(staging)):
-            parquets = sorted(f for f in files if f.endswith(".parquet"))
-            if parquets:
-                rel = os.path.relpath(dirpath, staging)
-                files_by_part.append((rel, [os.path.join(dirpath, f) for f in parquets]))
+            _stage_with_spark(out, staging, self.cluster_by)
+        staged = _staged_files(staging, f"batch-{batch_id}")
         for r in range(self.replicants):
-            for rel, paths in files_by_part:
-                dst_dir = os.path.join(self._ds_root(r), rel)
-                os.makedirs(dst_dir, exist_ok=True)
-                for seq, src in enumerate(paths):
-                    dst = os.path.join(dst_dir, f"batch-{batch_id}-{seq}.parquet")
-                    # deterministic target → idempotent retry; hardlink is a
-                    # metadata op (measured 3× faster than copying on the
-                    # 720-bucket backfill), copy is the cross-device fallback
-                    if os.path.exists(dst):
-                        os.remove(dst)
-                    try:
-                        os.link(src, dst)
-                    except OSError:
-                        shutil.copyfile(src, dst)
-        if files_by_part:
-            # row count from parquet footers (cheap metadata read, no recompute)
-            import pyarrow.parquet as pq
-
-            n = sum(pq.ParquetFile(p).metadata.num_rows for _, ps in files_by_part for p in ps)
+            for rel, src in staged:
+                _link_or_copy(src, os.path.join(self._ds_root(r), rel))
+        n = _footer_rows(src for _, src in staged)
         shutil.rmtree(staging, ignore_errors=True)
-        os.makedirs(os.path.dirname(marker), exist_ok=True)
-        # write-then-commit so a crash mid-write never leaves a marker
-        # that would make a half-written batch look committed. The commit
-        # is pid-unique + EXCLUSIVE (r14 code-review, compact()'s
-        # protocol): two producers racing the same batch id — a
-        # misconfigured double daemon; the checkpoint contract says same
-        # id == same content — cannot silently clobber each other's
-        # marker; the loser treats the batch as already committed.
-        tmp = f"{marker}.tmp.{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump({"rows": n, "batch_id": batch_id}, f)
-        try:
-            os.link(tmp, marker)
-        except FileExistsError:
-            os.remove(tmp)
-            return 0  # a concurrent producer committed this batch first
-        except OSError:
-            # filesystem without hardlinks: atomic rename (loses the
-            # concurrent-producer guard, keeps crash atomicity)
-            os.rename(tmp, marker)
-        else:
-            os.remove(tmp)
+        # two producers racing one batch id (a misconfigured double daemon;
+        # the checkpoint contract says same id == same content): the loser
+        # treats the batch as already committed
+        if not _commit_marker(marker, {"rows": n, "batch_id": batch_id}):
+            return 0
         return n
 
     def _stage_local(self, layout: DataFrame, staging: str) -> None:
@@ -481,8 +523,8 @@ class SegmentSink:
         }
 
     def _check_replica(self, replica: int) -> None:
-        """The compact() replica-range guard (r13), extended to every read
-        path (r14 code-review): with replicants == 1 ``_ds_root`` aliases
+        """The compact() replica-range guard, extended to every read
+        path: with replicants == 1 ``_ds_root`` aliases
         ALL replica numbers to the same directory, but the marker
         namespaces stay per-replica — an out-of-range replica would find
         the files and none of their markers, so a snapshot read would
@@ -495,7 +537,7 @@ class SegmentSink:
 
     def committed_compactions(self, replica: int = 0) -> list[dict]:
         """Committed ``compact()`` markers for one replica, sorted by
-        generation (r13, VERDICT r12 #2). Each marker records the files a
+        generation. Each marker records the files a
         compaction published and the files it replaced, so the snapshot
         read can flip from old to new atomically at the marker rename."""
         self._check_replica(replica)
@@ -511,9 +553,9 @@ class SegmentSink:
         return sorted(out, key=lambda m: m["gen"])
 
     def committed_files(self, replica: int = 0) -> list[str]:
-        """The snapshot-visible parquet files of one replica (r13, extracted
-        from ``read`` so ``compact`` can both build its input and record
-        exactly what it replaces). Rules:
+        """The snapshot-visible parquet files of one replica (shared by
+        ``read`` and ``compact``, so ``compact`` can both build its input
+        and record exactly what it replaces). Rules:
 
         - ``batch-<id>-*.parquet`` needs a committed ``_batches`` marker;
         - ``compact-<gen>-*.parquet`` needs a committed ``_compactions``
@@ -521,7 +563,7 @@ class SegmentSink:
           and its marker leaves these invisible, exactly like a batch;
         - any file a committed compaction lists as ``replaced`` is excluded
           even if still on disk (the deletion phase may not have finished);
-        - anything else (pre-r13 ``part-*`` rewrites) is committed by the
+        - anything else (legacy ``part-*`` rewrites) is committed by the
           legacy protocol and included.
         """
         self._check_replica(replica)
@@ -556,7 +598,7 @@ class SegmentSink:
     def read(self, spark, replica: int = 0, committed_only: bool = False) -> DataFrame:
         """Read the segment layout back.
 
-        ``committed_only=True`` is the snapshot-isolation read (r12, the
+        ``committed_only=True`` is the snapshot-isolation read (the
         reference's DefunctBeam no-partial-segment story, SURVEY §2.6 W5):
         only files whose batch has a committed ``_batches`` marker are read,
         so a writer that died between publishing staged files and committing
@@ -565,7 +607,7 @@ class SegmentSink:
         File-level filtering works because every file ``write_batch``
         publishes is named ``batch-<id>-<seq>.parquet`` and every file
         ``compact`` publishes is named ``compact-<gen>-<seq>.parquet`` under
-        its own ``_compactions`` marker (r13 — see ``committed_files`` for
+        its own ``_compactions`` marker (see ``committed_files`` for
         the full rule set; a compacted layout reads identically through
         both modes once the compaction's deletion phase finishes, asserted
         in tests). The snapshot path never constructs the unfiltered
@@ -656,7 +698,7 @@ class MultiDatasourceSink:
             for ds, sink in self.sinks.items():
                 part = df.filter(F.col(self.datasource_col) == ds).drop(self.datasource_col)
                 total += sink.write_batch(self._transform(ds)(part), batch_id)
-            # NULL-safe unknown counting (r14 code-review): ~isin(known) is
+            # NULL-safe unknown counting: ~isin(known) is
             # NULL for a NULL datasource under three-valued logic, so the
             # rows most likely to be misrouted (an unmapped topic's
             # NULL tag) were dropped WITHOUT being counted
@@ -687,13 +729,12 @@ def compact(
     Streaming produces one file per (bucket, shard) per micro-batch; after N
     batches a bucket holds N small files and read amplification grows. This
     rewrites each over-target (bucket, shard) to at most
-    ``target_files_per_shard`` files (r14: a deterministic row-hash slice
+    ``target_files_per_shard`` files (a deterministic row-hash slice
     key makes targets above 1 real — hash co-location may merge slices,
     so "at most") using the SAME
-    stage → deterministic publish → marker protocol as ``write_batch`` (r13,
-    VERDICT r12 #2 — the r12 version used Spark's dynamic partition
-    overwrite, whose delete-then-rename commit window could lose the only
-    copy of a closed bucket on a crash):
+    stage → deterministic publish → marker protocol as ``write_batch`` (a
+    dynamic partition overwrite's delete-then-rename commit window could
+    lose the only copy of a closed bucket on a crash):
 
     1. read the COMMITTED snapshot (never a crashed predecessor's
        uncommitted leftovers) and record its file list — the ``replaced``
@@ -725,7 +766,7 @@ def compact(
 
     At 100 TB run it per closed bucket (watermark passed — no more writes),
     exactly like Druid compacting historical segments — that is what
-    ``before`` is for (r13): a ``g`` bucket-string cutoff
+    ``before`` is for: a ``g`` bucket-string cutoff
     ("yyyy-MM-dd-HH-mm"; lexicographic == chronological) restricting the
     rewrite to buckets STRICTLY earlier, so the maintenance job touches
     yesterday's closed segments while today's keep streaming (a batch
@@ -739,7 +780,7 @@ def compact(
     if before is not None and not re.fullmatch(
         r"\d{4}-\d{2}-\d{2}-\d{2}-\d{2}", before
     ):
-        # r13 code-review find: the cutoff is compared lexicographically
+        # the cutoff is compared lexicographically
         # against "yyyy-MM-dd-HH-mm" bucket strings — a date-only or
         # ISO-'T' cutoff would silently mis-scope the run (compare
         # "2024-06-01" < "2024-06-01-11-00" and "-" < "T"): a nightly
@@ -747,12 +788,10 @@ def compact(
         raise ValueError(
             f"before={before!r} is not a g bucket string (yyyy-MM-dd-HH-mm)"
         )
-    # r13 code-review find: _ds_root aliases EVERY replica number to the
-    # same directory when replicants == 1, so a wrong replica arg would
-    # read an empty marker namespace and the orphan janitor would delete
-    # committed compact files as "unmarked" — silent data loss where the
-    # pre-protocol code was a harmless no-op (r14: shared with the read
-    # paths as SegmentSink._check_replica)
+    # _ds_root aliases EVERY replica number to the same directory when
+    # replicants == 1, so a wrong replica arg would read an empty marker
+    # namespace and the orphan janitor would delete committed compact files
+    # as "unmarked" — silent data loss
     sink._check_replica(replica)
     base = sink._ds_root(replica)
     if not os.path.isdir(base):
@@ -768,8 +807,8 @@ def compact(
     # never committed its marker (crash in the publish→marker window).
     # Without this, the no-op early return below (or a retry with a larger
     # target) would leave them double-counted by the raw read forever; with
-    # it, the raw read's old+new visibility really is transient (r13
-    # code-review find). Snapshot reads never saw them either way.
+    # it, the raw read's old+new visibility really is transient. Snapshot
+    # reads never saw them either way.
     # (a marked generation can also carry EXTRA files its marker does not
     # list — a concurrent same-gen run that lost the marker race after
     # publishing, see the exclusive-link commit below — those are equally
@@ -785,26 +824,25 @@ def compact(
                 rel = os.path.relpath(os.path.join(dirpath, f), base)
                 if g not in marked_files or rel not in marked_files[g]:
                     os.remove(os.path.join(dirpath, f))
-    # staging janitor (r14 code-review follow-on): staging now outlives
-    # the marker commit (it backs the post-commit repair pass below), so
-    # a crash in the marker→cleanup window leaks a past generation's
-    # staging dir forever (later runs use higher gens and never revisit
-    # the path). Clear staging dirs of generations <= the last committed
-    # one — and BEFORE deleting a MARKED generation's staging, restore
-    # any of its files a double fault left missing from the live tree
-    # (crash after marker but before the repair pass, with a concurrent
-    # janitor having removed the published copies — staging holds the
-    # only remaining bytes). Staging of a HIGHER gen may belong to a
-    # live concurrent run and is left alone.
+    # staging janitor: staging outlives the marker commit (it backs the
+    # post-commit repair pass below), so a crash in the marker→cleanup
+    # window leaks a past generation's staging dir forever (later runs use
+    # higher gens and never revisit the path). Clear staging dirs of
+    # generations <= the last committed one — and BEFORE deleting a MARKED
+    # generation's staging, restore any of its files a double fault left
+    # missing from the live tree (crash after marker but before the repair
+    # pass, with a concurrent janitor having removed the published copies —
+    # staging holds the only remaining bytes). Staging of a HIGHER gen may
+    # belong to a live concurrent run and is left alone.
     stage_root = f"{sink.root}/_staging"
     last_gen = committed[-1]["gen"] if committed else 0
     stage_prefix = f"compact-{sink.datasource}-r{replica}-"
-    # restore provenance (ADVICE r14): with pid-unique staging dirs a
-    # marked generation can have SEVERAL staging dirs on disk (the winner's
-    # plus same-gen losers'); only the one the marker itself names holds
-    # the exact file sequence the marker's counts were taken from. Legacy
-    # markers (no "staging" key) predate pid-suffixed dirs, so any dir of
-    # their generation is theirs.
+    # restore provenance: with pid-unique staging dirs a marked generation
+    # can have SEVERAL staging dirs on disk (the winner's plus same-gen
+    # losers'); only the one the marker itself names holds the exact file
+    # sequence the marker's counts were taken from. Legacy markers (no
+    # "staging" key) predate pid-suffixed dirs, so any dir of their
+    # generation is theirs.
     marker_staging = {m["gen"]: m.get("staging") for m in committed}
     if os.path.isdir(stage_root):
         for d in sorted(os.listdir(stage_root)):
@@ -821,22 +859,10 @@ def compact(
                 continue
             sdir = os.path.join(stage_root, d)
             if g in marked_files and marker_staging.get(g) in (None, d):
-                for dirpath, _dirs, fs in sorted(os.walk(sdir)):
-                    parquets = sorted(f for f in fs if f.endswith(".parquet"))
-                    if not parquets:
-                        continue
-                    rel_dir = os.path.relpath(dirpath, sdir)
-                    for seq, name in enumerate(parquets):
-                        rel = os.path.normpath(
-                            os.path.join(rel_dir, f"compact-{g}-{seq}.parquet")
-                        )
-                        dst = os.path.join(base, rel)
-                        if rel in marked_files[g] and not os.path.exists(dst):
-                            os.makedirs(os.path.dirname(dst), exist_ok=True)
-                            try:
-                                os.link(os.path.join(dirpath, name), dst)
-                            except OSError:
-                                shutil.copyfile(os.path.join(dirpath, name), dst)
+                for rel, src in _staged_files(sdir, f"compact-{g}"):
+                    dst = os.path.join(base, rel)
+                    if rel in marked_files[g] and not os.path.exists(dst):
+                        _link_or_copy(src, dst)
             shutil.rmtree(sdir, ignore_errors=True)
     live = sink.committed_files(replica)
     if before is not None:
@@ -852,9 +878,9 @@ def compact(
 
         # files with NO g= component (legacy/manual placement) are
         # excluded from a scoped run — their bucket is unknown, so they
-        # may be active; only a FULL compact may rewrite them (r13
-        # code-review find: coercing None to "" made them sort earliest
-        # and swept them into every scoped run)
+        # may be active; only a FULL compact may rewrite them (coercing
+        # None to "" would sort them earliest and sweep them into every
+        # scoped run)
         live = [
             f
             for f in live
@@ -865,9 +891,9 @@ def compact(
     by_dir: dict[str, int] = {}
     for f in live:
         by_dir[os.path.dirname(f)] = by_dir.get(os.path.dirname(f), 0) + 1
-    # rewrite ONLY directories over target (r13 code-review find): at
-    # 100 TB a maintenance cycle must cost O(new small files), not re-read
-    # and re-publish every previously-compacted closed segment each run
+    # rewrite ONLY directories over target: at 100 TB a maintenance cycle
+    # must cost O(new small files), not re-read and re-publish every
+    # previously-compacted closed segment each run
     over = {d for d, n in by_dir.items() if n > target_files_per_shard}
     live = [f for f in live if os.path.dirname(f) in over]
     if not live:
@@ -891,12 +917,11 @@ def compact(
                 f"cluster_by columns missing from layout being compacted: {missing}"
             )
     n_parts = df.select("g", "p").distinct().count()
-    # pid-unique staging (ADVICE r14, medium — the marker-tmp / dq21-stage
-    # pattern): two concurrent same-generation compactors sharing one
-    # staging dir could rmtree each other mid-write or mid-publish-walk —
-    # the first run publishing a PARTIAL file set, still winning the
+    # pid-unique staging: two concurrent same-generation compactors sharing
+    # one staging dir could rmtree each other mid-write or mid-publish-walk
+    # — the first run publishing a PARTIAL file set, still winning the
     # marker link, then deleting the full replaced set (committed row
-    # loss). Each run now stages privately; the janitor above reaps only
+    # loss). Each run stages privately; the janitor above reaps only
     # stale generations and restores only from the dir the committed
     # marker itself names.
     staging = (
@@ -905,17 +930,15 @@ def compact(
     )
     if os.path.isdir(staging):
         # this (pid, thread)'s own crashed leftovers only — a live sibling
-        # thread has a distinct ident (r15 self-review: pid alone let two
+        # thread has a distinct ident (pid alone would let two
         # maintenance threads of one driver share a staging path)
         shutil.rmtree(staging)
     # hash-repartition on (g, p [, slice]) keeps each output group WHOLE
     # in one task, so re-running on a compacted layout stays a no-op (a
     # range partitioner on the cluster key could straddle a bucket across
     # a boundary and re-split it forever). target_files_per_shard > 1
-    # (r14 code-review: it used to be rewrite-threshold-only — (g, p)
-    # hash partitioning always collapsed each dir to ONE file no matter
-    # the target, silently producing oversized files where the caller
-    # asked for bounded ones) adds a deterministic row-hash slice key:
+    # adds a deterministic row-hash slice key (without it, (g, p) hash
+    # partitioning collapses each dir to ONE file whatever the target):
     # each (g, p) splits into UP TO `target` files (slices that hash to
     # the same task co-locate and merge), and the next run's over-target
     # check (n > target) stays a no-op at or under the target count.
@@ -930,112 +953,65 @@ def compact(
     df = df.repartition(max(n_parts * target_files_per_shard, 1), *part_cols)
     if target_files_per_shard > 1:
         df = df.drop("__slice")
-    if sink.cluster_by:
-        # (missing-column guard already ran, before the distinct-count job)
-        # Druid compaction with a range partitionsSpec: the N
-        # micro-batch-sized sorted runs of a closing bucket collapse into
-        # ONE file whose row groups cover tight, disjoint cluster-column
-        # ranges — the per-batch footer stats become bucket-wide ones
-        # exactly when the segment closes, which is when range reads
-        # start hitting it (sources/clustered.py holds the read-side
-        # story; tests assert the in-file order survives compaction)
-        df = df.sortWithinPartitions("g", "p", *sink.cluster_by)
-    df.write.mode("overwrite").partitionBy("g", "p").parquet(staging)
-    published: list[str] = []
-    published_src: dict[str, str] = {}
-    for dirpath, _dirs, fs in sorted(os.walk(staging)):
-        parquets = sorted(f for f in fs if f.endswith(".parquet"))
-        if not parquets:
-            continue
-        rel_dir = os.path.relpath(dirpath, staging)
+    # Druid compaction with a range partitionsSpec: the N micro-batch-sized
+    # sorted runs of a closing bucket collapse into ONE file whose row
+    # groups cover tight, disjoint cluster-column ranges — the per-batch
+    # footer stats become bucket-wide ones exactly when the segment closes,
+    # which is when range reads start hitting it (sources/clustered.py
+    # holds the read-side story; tests assert the in-file order survives
+    # compaction)
+    _stage_with_spark(df, staging, sink.cluster_by)
+    staged = _staged_files(staging, f"compact-{gen}")
+    # clear uncommitted leftovers of THIS generation: a crashed prior
+    # attempt may have published more seq files than this run will
+    for rel_dir in sorted({os.path.dirname(rel) for rel, _ in staged}):
         dst_dir = os.path.join(base, rel_dir)
         os.makedirs(dst_dir, exist_ok=True)
-        # clear uncommitted leftovers of THIS generation (a crashed prior
-        # attempt may have published more seq files than this run will)
         for stale in os.listdir(dst_dir):
             if stale.startswith(f"compact-{gen}-") and stale.endswith(".parquet"):
                 os.remove(os.path.join(dst_dir, stale))
-        for seq, name in enumerate(parquets):
-            dst = os.path.join(dst_dir, f"compact-{gen}-{seq}.parquet")
-            try:
-                os.link(os.path.join(dirpath, name), dst)
-            except OSError:
-                shutil.copyfile(os.path.join(dirpath, name), dst)
-            published.append(os.path.relpath(dst, base))
-            published_src[os.path.relpath(dst, base)] = os.path.join(dirpath, name)
-    import pyarrow.parquet as pq
+    for rel, src in staged:
+        _link_or_copy(src, os.path.join(base, rel))
+    rows = _footer_rows(src for _, src in staged)
+    # staging is NOT removed yet: a CONCURRENT compact's janitor can
+    # legally delete this run's published-but-unmarked files (they look
+    # exactly like a crashed predecessor's orphans); the staged inodes stay
+    # alive until after the marker commits so the repair pass below can
+    # restore anything the janitor took in that window.
 
-    rows = sum(
-        pq.ParquetFile(os.path.join(base, rel)).metadata.num_rows
-        for rel in published
-    )
-    # staging is NOT removed yet (r14 code-review): a CONCURRENT compact's
-    # janitor can legally delete this run's published-but-unmarked files
-    # (they look exactly like a crashed predecessor's orphans); the staged
-    # inodes stay alive until after the marker commits so the repair pass
-    # below can restore anything the janitor took in that window.
-
-    marker_dir = f"{sink.root}/_compactions"
-    os.makedirs(marker_dir, exist_ok=True)
-    marker = f"{marker_dir}/{sink.datasource}-r{replica}-{gen}"
+    marker = f"{sink.root}/_compactions/{sink.datasource}-r{replica}-{gen}"
     replaced = [os.path.relpath(f, base) for f in live]
-    # pid-unique tmp (the index-sidecar precedent): two concurrent
-    # compactors sharing one tmp path could clobber each other's payload
-    # before the link — harmless today only because same-generation runs
-    # provably publish row-identical sets, but uniqueness costs nothing
-    tmp = f"{marker}.tmp.{os.getpid()}"
-    with open(tmp, "w") as fh:
-        json.dump(
-            {"gen": gen, "replica": replica, "rows": rows,
-             "files": published, "replaced": replaced,
-             # the committing run's OWN staging dir (basename): the
-             # janitor's restore pass must link marked files only from
-             # here — a same-gen loser's staging may split rows into a
-             # different file sequence, and restoring a marked name from
-             # it would put divergent content behind the marker's counts
-             "staging": os.path.basename(staging)},
-            fh,
-        )
-    # the atomic flip — EXCLUSIVE: os.link fails with FileExistsError if a
-    # concurrent compactor committed the same generation first (r13
-    # code-review find: a plain rename would silently OVERWRITE the
-    # winner's marker, orphaning its published files while its replaced
-    # files were already deleted — committed rows lost). The loser aborts
+    payload = {
+        "gen": gen, "replica": replica, "rows": rows,
+        "files": [rel for rel, _ in staged], "replaced": replaced,
+        # the committing run's OWN staging dir (basename): the janitor's
+        # restore pass must link marked files only from here — a same-gen
+        # loser's staging may split rows into a different file sequence,
+        # and restoring a marked name from it would put divergent content
+        # behind the marker's counts
+        "staging": os.path.basename(staging),
+    }
+    # the atomic flip. A run that loses the race for its generation aborts
     # BEFORE its deletion phase: its published same-gen extras are
     # invisible to the snapshot (not in the winner's file list) and the
     # next run's janitor removes them.
-    try:
-        os.link(tmp, marker)
-    except FileExistsError:
-        os.remove(tmp)
+    if not _commit_marker(marker, payload):
         shutil.rmtree(staging, ignore_errors=True)
         raise RuntimeError(
             f"concurrent compaction committed generation {gen} first; "
             "this run's work was discarded (no data was deleted)"
         )
-    except OSError:
-        # filesystem without hardlinks: fall back to the atomic rename
-        # (loses the concurrent-compactor guard, keeps crash atomicity)
-        os.rename(tmp, marker)
-    else:
-        # separate from the link's try: a failed tmp cleanup must never
-        # fall into the no-hardlink fallback and re-commit over the
-        # marker we just created
-        os.remove(tmp)
 
-    # repair pass (r14 code-review): if a concurrent run's janitor removed
-    # any of this generation's files during the publish→marker window
-    # (unmarked then, marked now), restore them from the still-live
-    # staging inodes BEFORE deleting the replaced originals — without
-    # this, the committed marker could reference deleted files while the
-    # only other copy of those rows (the replaced set) is removed below.
-    for rel, src in published_src.items():
+    # repair pass: if a concurrent run's janitor removed any of this
+    # generation's files during the publish→marker window (unmarked then,
+    # marked now), restore them from the still-live staging inodes BEFORE
+    # deleting the replaced originals — without this, the committed marker
+    # could reference deleted files while the only other copy of those
+    # rows (the replaced set) is removed below.
+    for rel, src in staged:
         dst = os.path.join(base, rel)
         if not os.path.exists(dst):
-            try:
-                os.link(src, dst)
-            except OSError:
-                shutil.copyfile(src, dst)
+            _link_or_copy(src, dst)
 
     for rel in replaced:
         stale = os.path.join(base, rel)
