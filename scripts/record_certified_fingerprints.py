@@ -1,53 +1,55 @@
-"""Update tranquility_spark/certified_fingerprints.json for newly certified keys.
+"""Fold driver-green keys into tranquility_spark/certified_fingerprints.json.
 
-Run this when folding a new round's driver-green keys into
-``catalog._CERTIFIED`` (in the same commit that edits the ledger). It records
-a fingerprint only for a ``_CERTIFIED`` key the file does not hold yet and
-drops keys no longer in ``_CERTIFIED``; a recorded fingerprint is never
-rewritten. If any recorded fingerprint differs from the entry's current one,
-the script names those keys, writes nothing and exits 1: such an entry was
-edited since its certification and must be rotated back into the driver
-window (removed from ``_CERTIFIED``), not re-recorded.
+The JSON is the certification ledger: its keys are the certified catalog
+entries (``catalog._CERTIFIED``), each mapped to the fingerprint of the
+definition the driver certified. This script records the current fingerprint
+of each named key. It writes nothing and exits 1 if a named key is unknown or
+already recorded, or if any recorded fingerprint is stale: a stale entry was
+edited since its certification and must be rotated out (delete its line), not
+re-recorded.
 
-    python3 scripts/record_certified_fingerprints.py
+    python3 scripts/record_certified_fingerprints.py KEY [KEY ...]
 """
 
+import argparse
 import json
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tranquility_spark.catalog import _CERTIFIED, certification_fingerprint  # noqa: E402
+from tranquility_spark.catalog import _LEDGER, CATALOG, certification_fingerprint  # noqa: E402
 
-OUT = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "tranquility_spark",
-    "certified_fingerprints.json",
-)
+OUT = _LEDGER
 
 
-def main() -> int:
-    recorded = {}
-    if os.path.exists(OUT):
-        with open(OUT, encoding="utf-8") as fh:
-            recorded = json.load(fh)
-    kept = {k: v for k, v in recorded.items() if k in _CERTIFIED}
-    stale = sorted(k for k, v in kept.items() if certification_fingerprint(k) != v)
-    if stale:
-        print(
-            "certified entries changed since certification (rotate them out "
-            f"of _CERTIFIED, do not re-record): {', '.join(stale)}",
-            file=sys.stderr,
-        )
+def main(argv=None) -> int:
+    ap = argparse.ArgumentParser(
+        description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter
+    )
+    ap.add_argument("keys", nargs="+", metavar="KEY", help="driver-green catalog key to fold")
+    keys = list(dict.fromkeys(ap.parse_args(argv).keys))
+    with open(OUT, encoding="utf-8") as fh:
+        recorded = json.load(fh)
+    stale = sorted(
+        k for k, v in recorded.items() if k not in CATALOG or certification_fingerprint(k) != v
+    )
+    refused = [
+        ("unknown keys", [k for k in keys if k not in CATALOG]),
+        ("already recorded", [k for k in keys if k in recorded]),
+        ("certified entries changed since certification (rotate them out: "
+         "delete their lines, do not re-record)", stale),
+    ]
+    refused = [(why, ks) for why, ks in refused if ks]
+    for why, ks in refused:
+        print(f"{why}: {', '.join(ks)}", file=sys.stderr)
+    if refused:
         return 1
-    added = sorted(set(_CERTIFIED) - set(kept))
-    fingerprints = {**kept, **{k: certification_fingerprint(k) for k in added}}
+    recorded.update({k: certification_fingerprint(k) for k in keys})
     with open(OUT, "w", encoding="utf-8") as fh:
-        json.dump(fingerprints, fh, indent=1, sort_keys=True)
+        json.dump(recorded, fh, indent=1, sort_keys=True)
         fh.write("\n")
-    dropped = len(recorded) - len(kept)
-    print(f"wrote {len(fingerprints)} fingerprints to {OUT} ({len(added)} added, {dropped} dropped)")
+    print(f"wrote {len(recorded)} fingerprints to {OUT} ({len(keys)} added)")
     return 0
 
 

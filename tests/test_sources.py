@@ -10,6 +10,8 @@ import datetime as dt
 import json
 import urllib.request
 
+import pytest
+
 from tranquility_spark.sources.kafka import parse_kafka_batch, topic_to_datasource
 from tranquility_spark.sources.http_server import IngestServer, _parse_body
 from tranquility_spark.specs import Count, DimensionsSpec, DoubleSum, GranularitySpec, IngestSpec, TimestampSpec
@@ -192,6 +194,34 @@ def test_kafka_main_pipeline_without_broker(spark, tmp_path):
     assert multi.sinks["metrics"].read(spark).count() == 1
 
 
+def test_partitions_without_shard_key_raise(tmp_path):
+    """partitions > 1 with no shard key would write every row to shard 0:
+    the sink, build_server and build_sinks refuse it at construction."""
+    from tranquility_spark.kafka_main import build_sinks
+    from tranquility_spark.server_main import build_server
+    from tranquility_spark.streaming.sink import SegmentSink
+
+    with pytest.raises(ValueError, match="shard_key"):
+        SegmentSink(str(tmp_path / "segments"), "wiki", "HOUR", partitions=2)
+    config = {
+        "dataSources": [{
+            "spec": {"dataSchema": {
+                "dataSource": "wiki",
+                "parser": {"parseSpec": {
+                    "timestampSpec": {"column": "timestamp", "format": "iso"},
+                    "dimensionsSpec": {"dimensions": ["page"]}}},
+                "granularitySpec": {"segmentGranularity": "HOUR"},
+            }},
+            "tuning": {"partitions": 2},
+        }],
+        "sink": {"root": str(tmp_path / "segments")},
+    }
+    with pytest.raises(ValueError, match="shard_key"):
+        build_server(config, spark=object())  # the sink is built before any Spark use
+    with pytest.raises(ValueError, match="shard_key"):
+        build_sinks(config)
+
+
 def test_http_ingest_exact_drop_counts_per_reason(spark):
     """One 500-event POST: 15 events 30 min outside PT10M, 5 with an
     unparseable timestamp. The response and the Tranquilizer's per-reason
@@ -248,6 +278,42 @@ def test_http_ingest_malformed_body_400(spark):
             raised = True
             assert e.code == 400
         assert raised
+    finally:
+        server.stop()
+
+
+def test_http_ingest_failed_flush_500_keeps_serving():
+    """A flush that raises answers 500 with its message instead of dropping
+    the connection, and the server goes on answering later POSTs."""
+    from concurrent.futures import Future
+
+    from tranquility_spark.streaming.tranquilizer import MessageDroppedException, SendResult
+
+    class FailingOnceTranquilizer:
+        def __init__(self):
+            self.failures_left, self._buffer = 1, []
+
+        def send(self, event):
+            fut = Future()
+            self._buffer.append(fut)
+            return fut
+
+        def flush(self):
+            futures, self._buffer = self._buffer, []
+            if self.failures_left:
+                self.failures_left -= 1
+                raise MessageDroppedException("sink wrote 0 of 1 rows")
+            for fut in futures:
+                fut.set_result(SendResult(sent=True))
+
+        def close(self):
+            pass
+
+    server = IngestServer({"wiki": FailingOnceTranquilizer()}).start()
+    try:
+        url = f"http://127.0.0.1:{server.port}/v1/post/wiki"
+        assert _post(url, [{"page": "a"}]) == (500, {"error": "sink wrote 0 of 1 rows"})
+        assert _post(url, [{"page": "a"}]) == (200, {"result": {"received": 1, "sent": 1}})
     finally:
         server.stop()
 

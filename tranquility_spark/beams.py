@@ -19,7 +19,7 @@ accepted as documented no-ops so existing call sites port mechanically.
         .dimensions(["page", "channel"])
         .metrics([Count("n"), DoubleSum("added_sum", "added")])
         .granularity(segment="HOUR", query="MINUTE")
-        .tuning(window_period="PT10M", partitions=2)
+        .tuning(window_period="PT10M", partitions=2, shard_key="page")
         .location(datasource="wiki")
         .sink_root("/data/segments")
         .build_tranquilizer(spark))

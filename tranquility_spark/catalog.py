@@ -23,6 +23,8 @@ LLM-pipeline ops).
 
 from __future__ import annotations
 
+import json
+import os
 from dataclasses import dataclass
 from typing import Callable, Optional
 
@@ -1867,80 +1869,28 @@ from tranquility_spark import catalog_sketch  # noqa: E402,F401
 
 # ---------------------------------------------------------------------------
 # Driver-window rotation. The correctness driver certifies the FIRST 50 keys
-# of ``queries()`` in dict order each round. Certification ledger:
-#   - r01/r02 driver-green: the original first 50 (CORRECTNESS_r01/r02.json).
-#   - r03/r04 driver-green: the 46 relational-extension + round-3/4 keys
-#     (CORRECTNESS_r03/r04.json).
-#   - r05 driver-green: the 16 rotated/new keys of CORRECTNESS_r05.json
-#     (42/42 oracle-checked passed; the 16 not already certified fold in).
-#   - r06 driver-green: 42/42 oracled passed; 10 of the 17 newly-green
-#     keys fold in (f6/a10d/dd10/dq8/dq9/emb5/sim4 re-edited in r07 and
-#     rotated back).
-#   - r07 driver-green: 40/40 oracled passed (CORRECTNESS_r07.json); the
-#     36 newly-green keys fold in (dd12 was edited in r08 — sbbf_probe
-#     helper — and rotates back instead).
-# All of those live in ``_CERTIFIED`` below. The r08 window leads with the
-# rows-only-by-policy sketch/LSH entries (no SQL oracle — kept in-window
-# permanently so EVERY round re-records their weaker rows-only check), then
-# the w6/sim3/dd12 re-certifies, then auto-fills with any key not in
-# ``_CERTIFIED`` (i.e. new round-8 entries).
-# The rotation only permutes dict order; every key keeps the same fn/oracle,
-# so previously recorded certifications remain valid. Staleness contract:
-# changing a certified entry's fn or oracle REQUIRES removing it from
-# ``_CERTIFIED`` (mechanized — tests/test_edge_cases.py checks each certified
-# entry's source fingerprint against certified_fingerprints.json; regenerate
-# with scripts/record_certified_fingerprints.py only when folding new greens).
+# of ``queries()`` in dict order each round; the rotation only permutes that
+# order. The ledger is certified_fingerprints.json (history: ADJUDICATION.md):
+# fold greens with scripts/record_certified_fingerprints.py KEY...; rotate a
+# key out by deleting its line.
 # ---------------------------------------------------------------------------
 
+_LEDGER = os.path.join(os.path.dirname(os.path.abspath(__file__)), "certified_fingerprints.json")
+with open(_LEDGER, encoding="utf-8") as _fh:
+    _CERTIFIED = frozenset(json.load(_fh))
+
+# Rows-only by policy (sketches, LSH, index-defined probe sets: no SQL oracle
+# for a driver row to hash-match), so they lead the window permanently.
 _R18_DRIVER_WINDOW = [
-    # rows-only by policy (approximate sketches / LSH / index-defined probe
-    # sets — no SQL oracle); re-recorded every round by design. Round 17's
-    # driver greens folded into _CERTIFIED (CORRECTNESS_r17.json: 21/21
-    # oracled hash-greens, 0 fails — the pipe9 re-certify and the new
-    # pipe10/dd33 compositions fold in; the rest were already-certified
-    # backfill. pipe11/pipe12 were ALSO r17-green but round 18 edits
-    # them — the ADVICE r17 #3 A1-digest location key and the
-    # certification-boolean split into pipe11b/pipe12b — so they stay
-    # in the window until driver-re-certified instead of folding). The
-    # r17 judge ALSO ran the full 246-entry parity sweep independently
-    # (VERDICT r17: 211 oracled OK + 35 rows-only, 0 failures), so every
-    # folded key carries both a driver hash-match and a judge re-check.
-    # After the fold the window holds these 26 permanent rows-only
-    # leads; new r18 entries and any r18 rotations auto-join via
-    # _rotate_driver_window.
-    "hh1_heavy_hitters_merge",
-    "a11c_theta_setops_approx",
-    "a11d_sketch_merge_rollup",
-    "dd8_incremental_neardup",
-    "a10c_quantile_sketch_merge",
-    "dd11_bloom_gated_neardup",
-    "sim5_pq_rerank",
-    "pipe5_incremental_ingest",
-    "a6c_hyperunique_mergeable",
-    "a11e_theta_native",
-    "a10e_kll_deterministic",
-    "emb9_principal_component",
-    "sim3_ivf_topk",
-    "dd13b_kmeans_semantic_dedup",
-    "a10f_gk_quantiles",
-    "emb10_pca_project",
-    "sim3b_ivf_persisted_serving",
-    "sim5b_ivfpq_persisted_serving",
-    "dd17_simhash_neardup",
-    "dd18_simhash_incremental",
-    # r13's served-index headline entries: pair/probe sets defined by the
-    # persisted index layouts (no SQL oracle — their b-twins carry the
-    # constant-oracle equality certification and ARE certified). Permanent
-    # rows-only leads like dd17/dd18.
-    "dd19_simhash_served_pairs",
-    "dd20_minhash_served_pairs",
-    "dd21_simhash_incremental_served",
-    "dd22_minhash_incremental_served",
-    # r15's image served-index entries: pair sets defined by the persisted
-    # dhash index layout (no SQL oracle — dd16b/dd24b carry the certified
-    # equality twins). Permanent rows-only leads like dd19–dd22.
-    "dd23_dhash_served_pairs",
-    "dd24_dhash_incremental_served",
+    "hh1_heavy_hitters_merge", "a11c_theta_setops_approx", "a11d_sketch_merge_rollup",
+    "dd8_incremental_neardup", "a10c_quantile_sketch_merge", "dd11_bloom_gated_neardup",
+    "sim5_pq_rerank", "pipe5_incremental_ingest", "a6c_hyperunique_mergeable", "a11e_theta_native",
+    "a10e_kll_deterministic", "emb9_principal_component", "sim3_ivf_topk",
+    "dd13b_kmeans_semantic_dedup", "a10f_gk_quantiles", "emb10_pca_project",
+    "sim3b_ivf_persisted_serving", "sim5b_ivfpq_persisted_serving", "dd17_simhash_neardup",
+    "dd18_simhash_incremental", "dd19_simhash_served_pairs", "dd20_minhash_served_pairs",
+    "dd21_simhash_incremental_served", "dd22_minhash_incremental_served",
+    "dd23_dhash_served_pairs", "dd24_dhash_incremental_served",
 ]
 
 
@@ -1955,423 +1905,14 @@ def _rotate_driver_window() -> None:
     CATALOG.update(ordered)
 
 
-# Every key with a green (hash-match) driver CORRECTNESS row:
-# r01/r02 certified the first 50; r03/r04 certified the next 46;
-# r05 certified 16; r06 folded in 10 of its 17 newly-green keys; r07
-# folds in 36 (its 40 greens minus p1/p3/p4 already certified and minus
-# dd12, edited in round 8 and rotated back). r08 folds in 12
-# (CORRECTNESS_r08.json: 34 greens, 22 of them already-certified
-# backfill; the 12 newly green = the 5 new r08 oracled entries + the 7
-# re-certifies w6/dd12/mm1/mm3/mm4/dq8 plus samp9; mm4 then rotated
-# back out in round 9 for the soundfile dtype fix). r09 folds in 10
-# (CORRECTNESS_r09.json: 31 greens, 0 fails: the 9 new r09 oracled
-# entries p11/p11b/p12/txt19/rank2/dq18/pipe7/mm6/dd16 + the mm4
-# re-certify) — of which 8 (p11/p11b/p12/mm6/dd16/txt19/rank2/pipe7)
-# rotated back OUT in round 10 for ADVICE-r9 helper fixes and the
-# bm25_scores stats= extension, leaving a 161-key ledger at the end of
-# round 10 (ADVICE r10 #1: the old "Total: 169" over-counted by
-# including those 8). r10 folds in 10 (CORRECTNESS_r10.json: 29 greens,
-# 0 fails; 19 were already-certified backfill; the 10 newly green = the
-# 8 r10 re-certifies + txt20_bm25_served_stats + dd2b_distinct_sig_guard,
-# of which 5 (dd2b/txt19/rank2/pipe7/txt20) rotated back OUT in round 11
-# for the ADVICE r10 #3/#4 fixes). Round 11 also rotated q3/q5/q7/q8 out
-# for the VERDICT r10 #3 broadcast de-hinting (extended in the same
-# round to q14/q15/q17/q19/q21 and dq11, the remaining SF-scaling
-# broadcast sites), and p12 out for the VERDICT r10 #6 smile
-# binary-token extension.
-# r11 folds in 27 (CORRECTNESS_r11.json: 32 hash-greens, 0 fails;
-# p1/p3/p4 were already-certified backfill; of the 29 newly green,
-# emb9b and a10g rotate straight back out in round 12 — emb9b for the
-# ADVICE r11 #3 relative-tolerance fn edit, a10g because ADVICE r11 #2
-# edited its gk_certified_error helper).
-# r12 folds in 16 (CORRECTNESS_r12.json: 21 hash-greens, 0 fails; of
-# those, sim3c/sim3e/sim5c/dd13c rotate straight back out in round 13
-# for the ADVICE r12 #1 Lloyd-mean NULL-cast-count fix to their
-# ivf_centroids/pq_codebooks builders, and p12 for the ADVICE r12 #2
-# _record_fits import hoist — see the r13 window note below).
-# r13 folds in 10 — with a caveat recorded honestly: the driver never
-# wrote CORRECTNESS_r13.json (no r13 driver artifacts exist), so unlike
-# every earlier fold these 10 keys carry OWN-RUN evidence, not a driver
-# hash-match: round 13 ran the full 225-entry parity sweep 4× at both
-# SFs (0 failures, ADJUDICATION.md), and round 14 re-ran exactly these
-# 10 keys via scripts/check_parity.py (the driver-compare mimic) at
-# sf0.01 AND sf0.1 in the fold commit — 20/20 OK. The 10 = the 5 r13
-# re-certifies (sim3c/sim3e/sim5c/dd13c after the ADVICE r12 #1
-# Lloyd-mean fix, p12 after the #2 import hoist) + the 5 new r13
-# oracled entries (dd19b/dd20b/dq20/dd21b/dd22b). If a future driver
-# round hash-checks any of them, its verdict supersedes this note.
-# PARTIAL SUPERSESSION (r15): CORRECTNESS_r14.json hash-matched all six
-# entries it sampled from the r13 fold's blast radius (dq20 + the four
-# served-index twins after their r14 helper rotation, plus p-family
-# backfill), and the r14 judge independently re-ran 16 entries incl.
-# sim3c-family keys via check_parity.py — 16/16. The own-run caveat now
-# only covers keys no driver/judge run has re-touched since the fold.
-# r14 folds in 6 (CORRECTNESS_r14.json: 23 hash-greens, 0 fails; 17 were
-# already-certified backfill; the 6 newly green = dq21_range_clustered_scan
-# plus the 5 r14 helper-rotation re-certifies dq20/dd19b/dd20b/dd21b/dd22b).
-# r15 folds in 21 (CORRECTNESS_r15.json: 24 hash-greens, 0 fails;
-# p1/p3/p4 were already-certified backfill; the 21 newly green = the 9
-# rotated re-certifies dq20/dq21/sim3c/sim5c/dd18b/dd19b/dd20b/dd21b/
-# dd22b, the image twins dd16b/dd24b, and ALL TEN r15b family entries
-# mm7/dd25/dd26/dd27 + mm8/dd28/dd29/dd30 + dd31/dd32 — each ALSO
-# independently re-verified in the r15 judge's full 240-entry sweep).
-# Total: 218 = the CURRENT ledger size (len(_CERTIFIED)): keys whose
-# latest fn/oracle revision has a driver hash-match (or the documented
-# r13 own-run evidence above), MINUS the sixteen r16 rotations (dd31/
-# dd32 for the pointer-doubling CC; dd16/dd16b/dd24b/dd25/dd26/dd27/
-# dd28/dd29/dd30 + the SimHash twins dd17b/dd18b/dd19b for the
-# digest-width + uncapped-df guard retrofits; dq19/dq20 for the
-# exact-double oracle-literal fix — see the window list).
-# Keys rotated back into the window are subtracted until re-certified.
-# DEFINITION ANNOTATION (r15, closing VERDICT r14 "What's wrong" #1):
-# nine ledger members are rows-only by policy (no SQL oracle, so a
-# driver row can never literally hash-match): a6_hyperunique_approx,
-# a10_quantiles_approx, a11_theta_sketch_approx, dd2_minhash_lsh_pairs,
-# dd3_simhash_signatures, dd5_embedding_neardup, sim2_lsh_topk,
-# dd7_neardup_survivors, pipe1_corpus_pipeline. Each is certified VIA
-# its hash-green certification twin (a6c2/a10c2/a11c2+a11e2/dd2b/dd3b/
-# dd5b/sim2b/dd7b/pipe1b respectively): the twin's driver hash-match
-# pins the primary's fn behind a constant-oracle equality/contract, and
-# the fingerprint guard still holds the primary's source frozen. They
-# stay in _CERTIFIED under that widened definition rather than joining
-# the permanent rows-only window leads (which have NO such twin).
-_CERTIFIED = frozenset(
-    {
-        # --- r19 OPTIMIZATION round rotations (ADVICE r18 #1): dd7/dd7b/
-        # pipe1/pipe1b/pipe5b rotate OUT — they execute minhash_lsh_pairs /
-        # lsh_band_index, whose r18 plan changed for every caller (the
-        # pushed-filter UDF duplication removed + the unconditional banded
-        # localCheckpoint), so by the helper-edit rotation discipline their
-        # certifications were stale the moment r18 landed. Results are
-        # unchanged (full-catalog parity green at sf0.01 both rounds);
-        # they re-certify when the driver next hash-checks them. r19 also
-        # rotates emb7 (Gram-matrix Arrow fold replaces the 45-agg decimal
-        # fold — exact arithmetic preserved, see OPTIMIZATION_r19.md)
-        # and dd3b/dd19b
-        # (ADVICE r18 #2 verified by plan diff against the pre-r18 tree:
-        # their executed plans DID change shape under the r18
-        # asNondeterministic flag — CollapseProject no longer merges the
-        # Projects over the nondeterministic simhash64, leaving stacked
-        # Project pairs; ArrowEvalPython counts and values unchanged.
-        # dd18b/dd21b were checked the same way and are byte-identical
-        # modulo run artifacts, so they KEEP their certification). ---
-        # --- r18 driver-green fold (r19 bookkeeping; CORRECTNESS_r18.json:
-        # 22/22 oracled hash-greens, 0 fails). p1/p3 were already-certified
-        # backfill. The greens r19 ITSELF edits do NOT fold (pipe8's
-        # extraction pool, pipe11/11b/12/12b/13/13b via the admit()/audit
-        # restructure) — they stay in the window until re-certified. The
-        # 13 whose fn and executed plan are untouched since the r18 driver
-        # hash-matched them fold in: ---
-        "dd2b_distinct_sig_guard", "dd8b_incremental_equals_full",
-        "dd16_dhash_neardup", "dd16b_dhash_served_equals_inline",
-        "dd17b_simhash_banding_contract",
-        "dd20b_minhash_served_equals_guarded",
-        "dd22b_minhash_incremental_served_equals_inline",
-        "dd25_audio_fp_pairs", "dd31_audio_fp_survivors",
-        "dd32_video_survivors", "pipe9_cross_family_admission",
-        "pipe10_cross_family_admission_keepone",
-        # --- r18 OPTIMIZATION round rotations: dd2/dd2b/dd8b/dd20b/dd22b
-        # (minhash UDF asNondeterministic removed the pushed-filter UDF
-        # duplication from every lsh_band_index plan; dd2 additionally
-        # checkpoints the banded frame), dd16/dd16b/dd17b/dd25 (the
-        # dhash_neardup_pairs digest-frame lineage cut), plus the
-        # earlier CC rotations dd31/dd32/pipe8/pipe9/pipe10. simhash64
-        # was also marked nondeterministic, but outside the
-        # dhash_neardup_pairs path (rotated via dd17b) no simhash plan
-        # contains a filter on the UDF output, so dd3/dd3b/dd18b/dd19b/
-        # dd21b keep their certification: expression value, evaluation
-        # count and plan shape are unchanged there (verified in the
-        # full-catalog parity sweep this round). ---
-        # --- r01/r02 window ---
-        "p1_json_parse", "p3_ts_extract", "p4_projection", "p5_schemaless",
-        "p6_window_filter", "p7_metric_coercion", "t1_segment_bucket",
-        "t2_query_granularity", "a1_a5_rollup_core", "a6_hyperunique_exact",
-        "a6_hyperunique_approx", "a7_cardinality_exact",
-        # (a8_filtered_aggs rotated back OUT in round 12: dq19's spatial
-        # branch edited its filter_to_column helper)
-        "a9_custom_fold_agg", "a10_quantiles_exact", "a10_quantiles_approx",
-        "a11_theta_sketch_approx", "a12_rollup_disabled", "a_derived_avg",
-        "d1_hash_partition", "flagship_hourly_rollup", "dd1_exact_dedup",
-        # (dd3_simhash_signatures rotated back OUT in round 12: the dd17
-        # work rewrote its simhash64 helper — bit-identical, re-verified)
-        "dd4_ngram_jaccard",
-        "dd5_embedding_neardup", "sim1_cosine_topk", "sim2_lsh_topk",
-        "txt1_lang_id", "txt2_quality_score",
-        "txt3_token_count", "txt4_fingerprint",
-        "samp1_hash_sample", "samp2_stratified_topn", "pack1_sequence_packing",
-        "dd6_contamination_overlap", "txt5_pii_redact", "txt6_repetition",
-        "txt7_quality_filter",
-        # (dd7_neardup_survivors rotated back OUT in round 19: its
-        # neardup_clusters -> minhash_lsh_pairs chain executes the r18
-        # lsh_band_index plan changes — ADVICE r18 #1)
-        "txt8_per_lang_quality_percentile",
-        # pipe1_corpus_pipeline: r01-certified (rows-green), rotated back
-        # OUT in round 12 — its fn was refactored into the shared
-        # _pipe1_stats helper for the pipe1b staged-equality probe
-        # (results unchanged; parity re-verified at both SFs).
-        "q1_pricing_summary",
-        "q6_forecast_revenue",
-        "j1_broadcast_dim_join", "j2_semi_join",
-        # --- r03/r04 window (46 green keys, CORRECTNESS_r03/r04.json) ---
-        "a11b_distinct_set_ops", "agg1_grouping_rollup", "dq1_time_boundary",
-        "dq2_segment_metadata", "dq3_search", "dq4_scan", "dq5_timeseries",
-        "dq6_topn", "dq7_groupby_having", "f1_string_functions",
-        "f2_date_functions", "f3_math_functions", "f4_conditional_null",
-        "f5_array_functions", "j3_anti_join", "j4_asof_last_event",
-        "j5_range_join_bucketed", "j6_asof_join_two_table",
-        "mv1_multivalue_dim_rollup", "mv2_pivot", "mv3_unpivot",
-        "p8_flatten_spec", "q10_returned_items", "q12_priority_shipping",
-        "q13_customer_distribution",
-        "q18_large_orders",
-        "q22_global_sales_opportunity", "q4_order_priority",
-        "s1_topk",
-        "samp3_weighted_sample", "set1_set_ops", "txt10_top_tokens",
-        "txt9_unigram_logprob", "w1_rank_in_partition", "w2_lag_lead_gap",
-        "w3_running_total", "w4_ntile_cume_dist",
-        # --- r05 window (16 newly green keys, CORRECTNESS_r05.json; mm2/mm3
-        # re-certified after their round-5 output/oracle changes) ---
-        "chunk1_doc_chunking", "emb1_normalize_quantize",
-        "emb2_label_centroids", "emb3_centroid_similarity",
-        "samp4_mixture_resample", "pipe2_chunk_dedup", "pipe3_training_prep",
-        "shuf1_epoch_shuffle",
-        "w5_time_range_window",
-        "mm2_frame_sample", "txt12_bigram_logprob",
-        "samp5_temperature_resample",
-        # --- r06 window (CORRECTNESS_r06.json: 42 greens, 17 newly green;
-        # 10 fold in here — the other 7 were edited in round 7 and rotate
-        # back into _R07_DRIVER_WINDOW instead: f6/a10d/dd10 (ADVICE r06
-        # fixes), dq8/dq9 (event_analytics refactor), emb5/sim4 (their
-        # binary_quantize helper gained the short-array guard, so their
-        # executed expression trees changed — the helper-edit discipline
-        # the fingerprint guard cannot mechanize) ---
-        "emb4_matryoshka_truncate", "txt11_boilerplate_ngrams",
-        "dd9_bloom_membership",
-        "rank1_pair_rerank", "samp6_source_cap",
-        "txt13_lexical_diversity", "txt14_oov_rate", "txt15_token_entropy",
-        "pipe4_quality_prep",
-        # --- r07 window (CORRECTNESS_r07.json: 40 greens, 36 fold in —
-        # p1/p3/p4 were certified backfill slots, and dd12's sbbf_probe
-        # helper was edited in round 8, so it rotates back instead) ---
-        "f6_winsorize_clip", "a10d_fixed_histogram",
-        "dd10_bloom_gated_antijoin", "dq9_funnel",
-        "emb5_binary_hamming_topk", "sim4_bq_rerank", "t4_tz_day_rollup",
-        "dq5b_zero_filled_timeseries", "dq10_lookup_dimension",
-        "dq12_nested_groupby", "dq13_moving_average",
-        "dq14_scan_keyset", "dq15_rolling_active_users", "a14_first_last",
-        "dd11b_gate_equals_ungated", "dd14_duplicate_passages",
-        "dd15_duplication_density",
-        # (dd13_semantic_dedup rotated back OUT in round 19: its fn now
-        # builds centroid literals via double_array_lit — executed plan
-        # byte-identical (committed diff), but the fn source changed,
-        # so the mechanized staleness rule rotates it)
-        "mm5_interleaved_packing", "samp7_curriculum_schedule",
-        "txt17_domain_reputation", "samp8_token_budget_select",
-        "pipe6_dataset_manifest", "emb8_spike_outliers",
-        "emb6_random_projection",
-        # (emb7_dim_covariance rotated back OUT in round 19: the 45-agg
-        # decimal fold became an exact Arrow Gram-matrix fold — VERDICT
-        # r18 #3; oracle hash-green at 3 SFs, re-certifies next driver
-        # pass)
-        "hh2_cms_frequency", "txt16_script_profile",
-        "f7_ewma_fold", "p9_csv_parse", "p9b_tsv_parse", "p10_jsonl_parse",
-        "w7_rolling_zscore",
-        # --- r08 window (CORRECTNESS_r08.json: 34 greens, 0 fails; the 12
-        # newly green fold in — 5 new r08 oracled entries, samp9, and the
-        # 6 re-certifies that round 8 rotated back for their fn/helper
-        # edits) ---
-        # (mm4_audio_frame_energy was also r08-green but rotated back in
-        # round 9 — its mapInPandas closure changed with the soundfile
-        # dtype="int16" fix)
-        "chunk2_token_chunks", "dd12_blocked_bloom",
-        "dq16_timeseries_grand_total", "dq17_time_extraction",
-        "dq8_retention_cohorts", "hh2b_cms_join_estimate",
-        "mm1_decode_features", "mm3_resize",
-        # (samp9_cluster_downweight rotated back OUT in round 19 — same
-        # double_array_lit fn edit as dd13; plan byte-identical)
-        "txt18_zipf_audit",
-        "w6_sessionize_batch",
-        # --- r09 window (CORRECTNESS_r09.json: 31 greens, 0 fails; the 10
-        # newly green fold in — the 9 new r09 oracled entries plus the mm4
-        # re-certify after the soundfile dtype="int16" fix). Of those,
-        # p11/p11b/p12/mm6/dd16 rotated straight back out in round 10 for
-        # the ADVICE r9 helper fixes, and txt19/rank2/pipe7 for the
-        # bm25_scores stats= extension (see _R10_DRIVER_WINDOW) ---
-        "dq18_subtotals_spec",
-        "mm4_audio_frame_energy",
-        # --- r10 window (CORRECTNESS_r10.json: 29 greens, 0 fails; the 10
-        # newly green fold in — the 8 r10 re-certifies (p11/p11b/p12 wire-
-        # codec range/shared-name fixes, mm6 dead-letter guard, dd16
-        # distinct-digest rewrite, txt19/rank2/pipe7 bm25_scores stats=
-        # extension) plus the two new r10 oracled entries) ---
-        # (txt19/rank2/pipe7/txt20/dd2b were also r10-green but rotated
-        # straight back out in round 11 for the ADVICE r10 #3/#4 fixes —
-        # dd2b's both_nonempty now counts both runs, and the bm25_scores
-        # stats= totals path gained the unmerged-partials guard)
-        "p11_avro_parse", "p11b_avro_evolution",
-        "mm6_image_dhash",
-        # (dd16_dhash_neardup was r09-certified here, rotated back OUT
-        # in round 16 for the _guard_hex16 retrofit — see the window)
-        # --- r11 window (CORRECTNESS_r11.json: 50 sampled, 32 hash-green,
-        # 0 fails; the 27 eligible newly-green fold in — 16 re-certifies
-        # (dd2b/txt19/rank2/pipe7/txt20 after the ADVICE r10 #3/#4 fixes,
-        # q3/q5/q7/q8/q14/q15/q17/q19/q21/dq11 after the broadcast
-        # de-hinting, p12 after the smile binary forms) plus 11 of the 13
-        # new r11 constant-oracle probes; emb9b/a10g rotate back out for
-        # the round-12 ADVICE edits) ---
-        "txt19_bm25_topk", "rank2_rrf_fusion",
-        "pipe7_chunk_retrieval", "txt20_bm25_served_stats",
-        "q3_shipping_priority", "q5_local_supplier_volume",
-        "q7_volume_shipping", "q8_market_share", "q14_promo_revenue",
-        "q15_top_supplier", "q17_small_quantity_revenue",
-        "q19_discounted_revenue", "q21_waiting_suppliers",
-        "dq11_topn_extraction",
-        # (p12_smile_parse was r11-green but rotated back OUT in round 12
-        # for the VERDICT r11 #5 big-number codec + _typed guard edits)
-        # (sim3c/sim3e/sim5c were r11-green but rotated back OUT in round
-        # 12 for the decimal-mean centroid/codebook builder fix)
-        "txt21_bm25_pruned_contract",
-        "hh1b_mg_sandwich_vs_exact", "emb10b_projection_properties",
-        "a10e2_kll_partition_invariance", "a10f2_gk_bounds_certified",
-        "a6c2_hll_merge_tracks_direct", "a11d2_kmv_merge_equals_direct",
-        "a10c2_qsketch_merge_equals_direct",
-        # --- r12 window (CORRECTNESS_r12.json: 21 hash-greens, 0 fails;
-        # 16 fold in — the emb9b/a10g/pipe1/a8 re-certifies after their
-        # round-12 helper/fn edits, dd3 after the simhash64 memoize/
-        # vectorize rewrite, the 9 new r12 certification probes
-        # (a11c2/a11e2/dd3b/dd5b/dd7b/sim2b/pipe1b/pipe5b + dd17b/dd18b),
-        # and dq19. sim3c/sim3e/sim5c/dd13c/p12 were also r12-green but
-        # rotate back out for the round-13 ADVICE fixes — see
-        # the r13 window — folded above with the own-run caveat) ---
-        "emb9b_pca_properties", "a10g_gk_deep_rollup",
-        "a8_filtered_aggs",
-        "dd3_simhash_signatures",
-        # (pipe1_corpus_pipeline / pipe1b_staged_equals_fused /
-        # pipe5b_ingest_stage_reconciliation / dd7b_survivor_contract
-        # rotated back OUT in round 19 — ADVICE r18 #1: their executed
-        # plans route through minhash_lsh_pairs / lsh_band_index, whose
-        # r18 optimization changed the plan for every caller)
-        # (dq19 rotated back OUT in round 16: the exact-double oracle
-        # literal fix changed its oracle text — see the window list)
-        "a11c2_theta_setops_tracks_exact", "a11e2_theta_native_tracks_exact",
-        # (dd3b rotated back OUT in round 19 — ADVICE r18 #2, verified:
-        # stacked Projects over the nondeterministic simhash64)
-        "dd5b_lsh_precision_recall_contract",
-        # (sim2b_lsh_topk_contract rotated back OUT in round 19 — its fn
-        # routes through the double_array_lit call sites)
-        # (dd17b was r12-green but rotated back OUT in round 16 for the
-        # _guard_hex16 retrofit its simhash_neardup_pairs side executes)
-        # (dd18b was r12-green but rotated back OUT in round 15: the r15
-        # image-family work factored simhash_incremental_pairs' core into
-        # the shared _banded_incremental_pairs helper it now executes —
-        # pure extraction, parity re-verified both SFs, rotated until
-        # driver-re-certified)
-        # --- r13 window (NO driver artifact — own-run evidence, see the
-        # ledger note above: full-sweep 4× both SFs in r13 + targeted
-        # check_parity.py 20/20 at both SFs in the r14 fold commit).
-        # dq20 and the four served-index twins were folded here, then
-        # rotated back OUT later in round 14 for the self-review helper
-        # edits (spatial grid sidecar + read fallbacks; register_bucketed
-        # quoting) — see the r14 re-certify block in the window list. ---
-        "sim3e_full_probe_equals_exact",
-        # (dd13c_learned_centroid_contract rotated back OUT in round 19 —
-        # same double_array_lit fn edit)
-        "p12_smile_parse",
-        # (sim3c/sim5c were r12-green, re-folded with the r13 caveat, then
-        # rotated back OUT in round 15 for the atomic first-touch retrofit
-        # — their fns now stage+rename the IVF/PQ layouts)
-        # --- r14 window (CORRECTNESS_r14.json: 23 hash-greens, 0 fails;
-        # the 6 newly green folded in — the new r14 range-clustered entry
-        # plus the 5 helper-rotation re-certifies; the judge independently
-        # re-ran dq21 and dq20 that round: green. ALL SIX then rotated
-        # back OUT later in round 15 for the same atomic first-touch
-        # retrofit (dq20/dq21 fn edits; the served-index twins consume
-        # the edited _served_index_table helper) — re-certified r15. ---
-        # --- r15 window (CORRECTNESS_r15.json: 24 hash-greens, 0 fails;
-        # the 21 newly green fold in — the 9 rotated re-certifies, the
-        # two image equality twins, and all ten r15b audio/video family
-        # entries, every one of which the r15 judge also independently
-        # re-verified in the full 240-entry parity sweep) ---
-        "dq21_range_clustered_scan",
-        # (dq20 rotated back OUT in round 16 with dq19, same fix)
-        "sim3c_served_equals_inline", "sim5c_served_equals_composition",
-        # (dd18b/dd19b were r15-green and folded here, then rotated back
-        # OUT in round 16 for the _guard_hex16 retrofit)
-        "dd21b_simhash_incremental_served_equals_inline",
-        "mm7_audio_fingerprint",
-        "mm8_video_frame_hashes",
-        # (dd31/dd32 were r15-green and folded here, then rotated back
-        # OUT in the same round-16 session for the VERDICT r15 #2
-        # pointer-doubling CC rewrite of their
-        # neardup_survivors_converged helper; dd16/dd16b/dd24b/dd25/
-        # dd26/dd27/dd28/dd29/dd30 likewise rotated in-session for the
-        # r16 digest-width and uncapped-df guard retrofits their
-        # helpers now execute — re-certified r16, folded below)
-        # --- r16 window (CORRECTNESS_r16.json: 24 hash-greens, 0 fails;
-        # the 18 newly green fold in — the 16 rotated re-certifies (the
-        # pointer-doubling CC survivors, the _guard_hex16 +
-        # uncapped-df-guard blast radius, the SimHash twins, and the
-        # exact-double spatial oracle literals) plus the two new r16
-        # cross-family compositions. The r16 judge also independently
-        # re-verified every one in the full 242-entry parity sweep
-        # (VERDICT r16: 207 oracled OK + 35 rows-only, 0 failures).
-        # p1/p3/p4/p5/p6/p7 were already-certified backfill. ---
-        "dd18b_simhash_incremental_equals_full",
-        # (dd19b rotated back OUT in round 19 — ADVICE r18 #2, verified:
-        # its plan shape changed under the r18 asNondeterministic flag)
-        "dd24b_dhash_incremental_served_equals_inline",
-        "dd26_audio_fp_served_pairs",
-        "dd27_audio_fp_incremental_served",
-        "dd28_video_neardup_pairs", "dd29_video_served_pairs",
-        "dd30_video_incremental_served",
-        # (dd31/dd32/pipe8/pipe10 rotated back OUT in the r18
-        # optimization round: their executed plans include the
-        # _cc_pointer_doubling min-neighbor-init + proven-flag rewrite —
-        # a helper edit the fingerprint guard cannot catch, rotated per
-        # the HANDOFF discipline. Outputs re-proven identical vs the
-        # oracles at sf0.01 in the same commit.)
-        "dq19_spatial_filter", "dq20_spatial_served_filter",
-        # --- r17 window (CORRECTNESS_r17.json: 21 hash-greens, 0 fails;
-        # 3 fold in — the pipe9 re-certify (after the r17 doc-only ADVICE
-        # r16 #1 rotation) and the new pipe10/dd33 compositions. The r17
-        # judge also independently re-verified every one in the full
-        # 246-entry parity sweep (VERDICT r17: 211 oracled OK + 35
-        # rows-only, 0 failures). pipe11/pipe12 were ALSO r17-green but
-        # round 18 edits them (ADVICE r17 #3 A1-digest key; the
-        # VERDICT r17 #2 certification-boolean split), so they stay in
-        # the window until driver-re-certified; the other 16 r17 greens
-        # were already-certified backfill. ---
-        # (pipe9 rotated back OUT in the r18 optimization round: its fn
-        # now overlaps the four family probes via _materialize_overlapped
-        # — guide §2.6; output re-proven identical vs the oracle at
-        # sf0.01 in the same commit.)
-        "dd33_video_incremental_capped",
-    }
-)
-
-
-# The fixture-reading oracles (catalog_relational._FIXTURE_DIR) embed the
-# checkout's absolute path, so the fingerprint payload replaces the
-# checkout's root with this placeholder — the staleness guard then gives
-# the same answer from any checkout, without regenerating the ledger.
+# Fixture oracles embed the checkout's path; fingerprints see this instead.
 _LEDGER_REPO_ROOT = "<repo>"
 
 
 def certification_fingerprint(name: str) -> str:
-    """Fingerprint of a catalog entry's observable definition: sha256 over
-    the entry fn's source text plus its oracle SQL.
-
-    Used by the staleness guard (tests/test_edge_cases.py): a ``_CERTIFIED``
-    entry whose fingerprint no longer matches certified_fingerprints.json has
-    been edited since the driver certified it and MUST be rotated back into
-    the driver window (the mm3 round-5 trap, mechanized — regenerate the
-    ledger with scripts/record_certified_fingerprints.py ONLY when folding a
-    new round's green keys). Limitation: edits to helper operators the fn
-    calls are not captured — those still require the reviewer discipline
-    documented in HANDOFF.md.
-    """
+    """sha256 of an entry's fn source + oracle SQL (helper edits: HANDOFF.md)."""
     import hashlib
     import inspect
-    import os
 
     entry = CATALOG[name]
     try:

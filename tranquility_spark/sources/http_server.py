@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import json
 import threading
+import traceback
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Mapping
 
@@ -100,9 +101,14 @@ class IngestServer:
                     self._respond(400, {"error": str(e)})
                     return
 
-                with outer._locks[datasource]:
-                    futures = [t.send(e) for e in events]
-                    t.flush()
+                try:
+                    with outer._locks[datasource]:
+                        futures = [t.send(e) for e in events]
+                        t.flush()
+                except Exception as e:  # a failed flush (Spark error, MessageDroppedException)
+                    traceback.print_exc()
+                    self._respond(500, {"error": str(e)})
+                    return
                 sent = 0
                 for f in futures:
                     try:

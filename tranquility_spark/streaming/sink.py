@@ -183,6 +183,11 @@ class SegmentSink:
                 "sink's minute-resolution bucket layout — use MINUTE or "
                 "coarser (queryGranularity may still be SECOND/NONE)"
             )
+        if partitions > 1 and shard_key is None:
+            # loud, not silently one shard: without a key every row gets p=0
+            raise ValueError(
+                f"partitions={partitions} needs a shard_key to split rows on"
+            )
         self.partitions = partitions
         self.replicants = replicants
         self.shard_key = shard_key
