@@ -74,7 +74,11 @@ def test_calendar_granularity_truncate_sql_is_floor(epoch, gran):
     assert epoch - got < unit
 
 
-@pytest.mark.parametrize("bad", ["10M", "PTXM", "P1D", ""])
+# "PT" .. "PT1H2M3S4": no component, or trailing digits without a unit
+# (once silently dropped: "PT10" read as 0 s, "PT1H30" as 1 h)
+@pytest.mark.parametrize(
+    "bad", ["10M", "PTXM", "P1D", "", "PT", "pt", "PT10", "PT1H30", "PT5M7", "PT1H2M3S4"]
+)
 def test_duration_parser_rejects_malformed(bad):
     with pytest.raises(ValueError):
         window_period_seconds(bad)

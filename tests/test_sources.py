@@ -318,6 +318,45 @@ def test_http_ingest_failed_flush_500_keeps_serving():
         server.stop()
 
 
+@pytest.mark.parametrize(
+    "raw",
+    [b"[1, 2]", b'[{"a": 1}, "b"]', b'[{"a": 1}, null]', b"7", b'{"a": 1}\n[2]\n'],
+    ids=["ints", "string", "null", "scalar", "ndjson_array_line"],
+)
+def test_parse_body_rejects_non_object_events(raw):
+    with pytest.raises(ValueError, match="must contain objects"):
+        _parse_body(raw)
+
+
+def test_http_ingest_non_object_body_400_sends_nothing():
+    """A JSON body with a non-object element answers 400 before any event
+    of it reaches the Tranquilizer (so its valid events are not half-sent
+    into a flush that then fails)."""
+    class RecordingTranquilizer:
+        def __init__(self):
+            self.sent, self.flushes = [], 0
+
+        def send(self, event):
+            self.sent.append(event)
+            raise AssertionError("send() reached for a rejected body")
+
+        def flush(self):
+            self.flushes += 1
+
+        def close(self):
+            pass
+
+    t = RecordingTranquilizer()
+    server = IngestServer({"wiki": t}).start()
+    try:
+        url = f"http://127.0.0.1:{server.port}/v1/post/wiki"
+        status, body = _post(url, [{"page": "a"}, [1, 2], {"page": "b"}])
+        assert status == 400 and "objects" in body["error"], body
+    finally:
+        server.stop()
+    assert t.sent == [] and t.flushes == 0
+
+
 def test_load_table_normalizes_every_observed_ts_physical_type(spark, tmp_path):
     """Testdata has regenerated events.ts with different parquet physical
     types across rounds (TIMESTAMP(NANOS) in r01-r03, timestamp[us]-no-tz in

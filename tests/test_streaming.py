@@ -1478,8 +1478,8 @@ def test_compact_merges_files_of_both_stage_writers(spark, tmp_path):
 
 def test_sink_commits_without_hardlinks(spark, tmp_path, monkeypatch):
     """On a filesystem without hardlinks every link of the commit protocol
-    takes its fallback: the batch lock an O_EXCL create, the publish a
-    copy, the batch and compaction markers a rename. Batches of both stage
+    takes its fallback: the publish a copy, the batch and compaction
+    markers a rename. Batches of both stage
     writers, a replay and a compaction still commit exactly: same snapshot
     rows, every marker present, the replay a no-op, no tmp file left and
     the batch lock released."""
@@ -1514,7 +1514,6 @@ def test_sink_commits_without_hardlinks(spark, tmp_path, monkeypatch):
     assert published and all(os.stat(f).st_nlink == 1 for f in published)  # copies
     assert not glob.glob(f"{root}/**/*.tmp.*", recursive=True)
     assert not glob.glob(f"{root}/_batches/*.lock")
-    assert not any(lock.startswith(root) for lock in SegmentSink._held_locks)
 
 
 def test_local_batch_stages_without_spark_write_job(spark, tmp_path, monkeypatch):
@@ -3272,56 +3271,10 @@ def test_window_period_retry_drift_clears_stale_buckets(spark, tmp_path, route):
     ), "stale bucket file from the crashed attempt leaked into the commit"
 
 
-def test_compact_repair_survives_janitor_race(spark, tmp_path):
-    """r14 code-review: a CONCURRENT compact's janitor may delete this run's
-    published-but-unmarked files (indistinguishable from a crashed
-    predecessor's orphans). The committing run must restore them from its
-    still-live staging AFTER winning the marker, BEFORE deleting the
-    replaced originals — else the marker references deleted files while
-    the only other copy is removed."""
-    import glob
-
-    import tranquility_spark.streaming.sink as sink_mod
-    from tranquility_spark.streaming.sink import compact
-
-    sink = SegmentSink(str(tmp_path / "seg"), "wiki", "HOUR")
-    for b in range(3):
-        df = spark.createDataFrame(
-            [(dt.datetime(2024, 6, 1, 11, b), f"p{b}")], "ts timestamp, page string"
-        )
-        sink.write_batch(df, b + 1)
-    want = sorted(f"p{b}" for b in range(3))
-
-    real_link = os.link
-
-    def janitor_strikes_then_link(s, d):
-        # simulate the concurrent janitor: just before THIS run commits its
-        # marker, every published-but-unmarked compact file vanishes
-        if os.path.basename(str(d)).startswith("wiki-r0-"):
-            for f in glob.glob(f"{sink._ds_root(0)}/**/compact-*.parquet",
-                               recursive=True):
-                os.remove(f)
-        real_link(s, d)
-
-    sink_mod.os.link = janitor_strikes_then_link
-    try:
-        assert compact(sink, spark) == 1
-    finally:
-        sink_mod.os.link = real_link
-
-    got = sorted(r.page for r in sink.read(spark, committed_only=True).collect())
-    assert got == want, "committed snapshot lost rows to the janitor race"
-    # and the layout is healthy: marker's files all exist
-    m = sink.committed_compactions(0)[-1]
-    for rel in m["files"]:
-        assert os.path.exists(os.path.join(sink._ds_root(0), rel)), rel
-
-
 def test_staging_janitor_restores_marked_files_and_clears_leaks(spark, tmp_path):
-    """r14: staging outlives the marker (it backs the repair pass), so a
-    crash in the marker→cleanup window leaks it. The next compact's staging
-    janitor must (a) restore any MARKED file a double fault left missing,
-    (b) remove past-generation staging dirs."""
+    """A run that dies before removing its staging dir leaks it; the next
+    compact() must remove it (no run of the replica is live then: they
+    serialize on the compaction lock) and leave the snapshot exact."""
     import glob
     import shutil as sh
 
@@ -3335,37 +3288,45 @@ def test_staging_janitor_restores_marked_files_and_clears_leaks(spark, tmp_path)
         sink.write_batch(df, b + 1)
     want = sorted(f"p{b}" for b in range(2))
     assert compact(sink, spark) == 1
-    # manufacture the double-fault state for gen 1: staging leaked AND a
-    # marked file missing from the live tree
+    # manufacture leaked staging dirs of the committed generation, under
+    # this version's name and an older version's pid/thread-suffixed one
     m = sink.committed_compactions(0)[-1]
-    gen = m["gen"]
     live_rel = m["files"][0]
     live = os.path.join(sink._ds_root(0), live_rel)
-    # the leaked dir is the committing run's OWN staging — the marker
-    # records its (pid-unique) basename; the janitor restores only from it
-    staging = f"{sink.root}/_staging/{m.get('staging', f'compact-wiki-r0-{gen}')}"
-    os.makedirs(os.path.dirname(staging), exist_ok=True)
-    # rebuild a staging dir holding the file under its staged name/layout
-    sdir = os.path.join(staging, os.path.dirname(live_rel))
-    os.makedirs(sdir, exist_ok=True)
-    sh.copyfile(live, os.path.join(sdir, "part-00000.snappy.parquet"))
-    os.remove(live)
-    # snapshot is broken right now (marker references a missing file) —
-    # one compact() call must repair it and clear the leaked staging
+    leaked = [
+        f"{sink.root}/_staging/compact-wiki-r0-{m['gen']}",
+        f"{sink.root}/_staging/compact-wiki-r0-{m['gen']}.999999.1",
+    ]
+    for staging in leaked:
+        sdir = os.path.join(staging, os.path.dirname(live_rel))
+        os.makedirs(sdir, exist_ok=True)
+        sh.copyfile(live, os.path.join(sdir, "part-00000.snappy.parquet"))
     compact(sink, spark)
-    assert os.path.exists(live), "staging janitor failed to restore the marked file"
-    assert not os.path.isdir(staging), "leaked staging dir not cleared"
+    for staging in leaked:
+        assert not os.path.isdir(staging), f"leaked staging dir not cleared: {staging}"
+    assert not glob.glob(f"{sink.root}/_compactions/*.lock")
     got = sorted(r.page for r in sink.read(spark, committed_only=True).collect())
     assert got == want
 
 
+# holds an exclusive flock on argv[1] until killed
+_FLOCK_HOLDER = (
+    "import fcntl, sys, time\n"
+    "fh = open(sys.argv[1], 'a')\n"
+    "fcntl.flock(fh, fcntl.LOCK_EX)\n"
+    "print('locked', flush=True)\n"
+    "time.sleep(600)\n"
+)
+
+
 def test_write_batch_live_lock_blocks_sweep(spark, tmp_path):
-    """ADVICE r14 (medium) + r15 self-review: a live concurrent producer
-    of the same batch id must not be able to sweep/clobber the other's
-    files — exclusivity is acquired BEFORE any mutation — and the blocked
-    producer WAITS for the holder's outcome (marker -> return 0; lock
-    freed -> write) instead of skipping on a liveness snapshot."""
-    import json as _json
+    """A live concurrent producer of the same batch id must not be able to
+    sweep/clobber the other's files — exclusivity is acquired BEFORE any
+    mutation — and the blocked producer WAITS for the holder's outcome
+    (marker -> return 0; lock freed -> write) instead of skipping on a
+    snapshot of who holds the lock."""
+    import subprocess
+    import sys
     import threading
     import time as _time
 
@@ -3375,24 +3336,26 @@ def test_write_batch_live_lock_blocks_sweep(spark, tmp_path):
     )
     assert sink.write_batch(df, 1) == 1
     # simulate the winner mid-protocol: its files are on disk, marker not
-    # yet committed, lock held by a live FOREIGN pid (pid 1 always alive)
+    # yet committed, lock held on a second descriptor
     marker = sink._marker_path(1)
     committed = open(marker).read()
     os.remove(marker)
-    with open(f"{marker}.lock", "w") as fh:
-        fh.write("1")
+    lock = sink._acquire_batch_lock(marker)
+    assert lock is not None
     files_before = sorted(
         os.path.join(dp, f)
         for dp, _d, fs in os.walk(sink._ds_root(0))
         for f in fs
         if f.startswith("batch-1-")
     )
-    # the holder "commits" its marker shortly after; the blocked producer
-    # must wait it out and return 0 without having touched any file
+    # the holder "commits" its marker shortly after, then releases; the
+    # blocked producer must wait it out and return 0 without having
+    # touched any file
     def commit_later():
         _time.sleep(1.0)
         with open(marker, "w") as fh:
             fh.write(committed)
+        sink._release_batch_lock(lock)
 
     t = threading.Thread(target=commit_later)
     t.start()
@@ -3408,14 +3371,152 @@ def test_write_batch_live_lock_blocks_sweep(spark, tmp_path):
         "a blocked producer deleted the lock holder's published files"
     )
     os.remove(marker)
-    os.remove(f"{marker}.lock")
-    # a lock recording OUR OWN pid but NOT held by a live thread of this
-    # process (leaked by a killed thread) is stale and is stolen
-    with open(f"{marker}.lock", "w") as fh:
-        fh.write(str(os.getpid()))
-    assert sink.write_batch(df, 1) == 1  # stolen and completed
+    # a holder SIGKILLed mid-protocol leaves its lock file behind, but the
+    # kernel dropped its lock: the next producer takes it and completes
+    holder = subprocess.Popen(
+        [sys.executable, "-c", _FLOCK_HOLDER, f"{marker}.lock"],
+        stdout=subprocess.PIPE, text=True,
+    )
+    try:
+        assert holder.stdout.readline().strip() == "locked"
+    finally:
+        holder.kill()
+        holder.wait()
+    assert os.path.exists(f"{marker}.lock")
+    assert sink.write_batch(df, 1) == 1  # taken over and completed
     assert not os.path.exists(f"{marker}.lock")
     assert sink.read(spark, committed_only=True).count() == 1
+
+
+def test_batch_lock_of_killed_holder_is_taken_without_waiting(tmp_path, monkeypatch):
+    """Spark-free: while a child process holds a batch lock, the lock is
+    refused; once the child is SIGKILLed the next write_batch proceeds at
+    once (no stale-lock wait) and releases the lock."""
+    import subprocess
+    import sys
+    import time as _time
+
+    sink = SegmentSink(str(tmp_path / "seg"), "wiki", "HOUR")
+    monkeypatch.setattr(SegmentSink, "_write_batch_locked", lambda self, df, bid, m: 7)
+    marker = sink._marker_path(3)
+    os.makedirs(os.path.dirname(marker))
+    holder = subprocess.Popen(
+        [sys.executable, "-c", _FLOCK_HOLDER, f"{marker}.lock"],
+        stdout=subprocess.PIPE, text=True,
+    )
+    try:
+        assert holder.stdout.readline().strip() == "locked"
+        assert sink._acquire_batch_lock(marker) is None  # a live holder excludes
+    finally:
+        holder.kill()
+        holder.wait()
+    t0 = _time.monotonic()
+    assert sink.write_batch(None, 3) == 7
+    assert _time.monotonic() - t0 < 0.2  # under one poll interval: no wait
+    assert not os.path.exists(f"{marker}.lock")
+
+
+def test_batch_lock_released_when_write_raises(tmp_path, monkeypatch):
+    """Spark-free: an exception inside the locked write propagates and
+    leaves the batch lock free for the retry."""
+    sink = SegmentSink(str(tmp_path / "seg"), "wiki", "HOUR")
+
+    def boom(self, df, batch_id, marker):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(SegmentSink, "_write_batch_locked", boom)
+    with pytest.raises(OSError, match="disk full"):
+        sink.write_batch(None, 4)
+    marker = sink._marker_path(4)
+    assert not os.path.exists(f"{marker}.lock")
+    lock = sink._acquire_batch_lock(marker)
+    assert lock is not None
+    sink._release_batch_lock(lock)
+
+
+def test_lock_excludes_under_thread_contention(tmp_path):
+    """Spark-free stress: more threads than cores take and release one lock
+    path in a tight loop with a short switch interval. Each release
+    removes the path, so a waiter may lock a file that no longer names it;
+    the holder count inside the lock must still never exceed one."""
+    import sys
+    import threading
+
+    from tranquility_spark.streaming.sink import _try_lock, _unlock
+
+    path = str(tmp_path / "locks" / "x.lock")
+    state = {"inside": 0, "max": 0, "done": 0}
+    n_threads, rounds = 8, 200
+
+    def worker():
+        for _ in range(rounds):
+            while (fh := _try_lock(path)) is None:
+                pass
+            state["inside"] += 1
+            state["max"] = max(state["max"], state["inside"])
+            state["done"] += 1
+            state["inside"] -= 1
+            _unlock(fh)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker) for _ in range(n_threads)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+            assert not t.is_alive()
+    finally:
+        sys.setswitchinterval(old)
+    assert state["max"] == 1
+    assert state["done"] == n_threads * rounds
+    assert not os.path.exists(path)
+
+
+def test_concurrent_compactions_serialize(spark, tmp_path):
+    """Two threads compact one sink at once: the lock makes them run one
+    after the other, so both return, exactly one new generation commits
+    (the second run finds the layout at target), the snapshot is exact and
+    no staging dir or lock file is left."""
+    import glob
+    import threading
+
+    from tranquility_spark.streaming.sink import compact
+
+    sink = SegmentSink(str(tmp_path / "seg"), "wiki", "HOUR")
+    for b in range(4):
+        df = spark.createDataFrame(
+            [(dt.datetime(2024, 6, 1, 11 + b % 2, b), f"p{b}")],
+            "ts timestamp, page string",
+        )
+        sink.write_batch(df, b + 1)
+    want = sorted(f"p{b}" for b in range(4))
+    start = threading.Barrier(2)
+    results, errors = [], []
+
+    def run():
+        start.wait(timeout=60)
+        try:
+            results.append(compact(sink, spark))
+        except Exception as e:  # surfaced by the assertion below
+            errors.append(e)
+
+    threads = [threading.Thread(target=run) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=600)
+        assert not t.is_alive()
+    assert not errors, errors
+    assert sorted(results) == [0, 2]  # one run rewrote both buckets
+    assert [m["gen"] for m in sink.committed_compactions(0)] == [1]
+    got = sorted(r.page for r in sink.read(spark, committed_only=True).collect())
+    assert got == want
+    raw = sorted(r.page for r in sink.read(spark).collect())
+    assert raw == want
+    assert not os.listdir(f"{sink.root}/_staging")
+    assert not glob.glob(f"{sink.root}/**/*.lock", recursive=True)
 
 
 def test_batch_lock_excludes_sibling_threads_of_same_pid(spark, tmp_path):
@@ -3435,53 +3536,6 @@ def test_batch_lock_excludes_sibling_threads_of_same_pid(spark, tmp_path):
     lock2 = sink._acquire_batch_lock(marker)
     assert lock2 is not None
     sink._release_batch_lock(lock2)
-
-
-def test_compact_staging_is_pid_unique_and_restore_is_provenance_checked(
-    spark, tmp_path
-):
-    """ADVICE r14 (medium): concurrent same-generation compactors must not
-    share a staging dir, and the janitor's restore pass must only link
-    marked files from the dir the committed marker itself names — a
-    same-gen loser's staging may hold a divergent file sequence."""
-    import shutil as sh
-
-    from tranquility_spark.streaming.sink import compact
-
-    sink = SegmentSink(str(tmp_path / "seg"), "wiki", "HOUR")
-    for b in range(2):
-        df = spark.createDataFrame(
-            [(dt.datetime(2024, 6, 1, 11, b), f"p{b}")], "ts timestamp, page string"
-        )
-        sink.write_batch(df, b + 1)
-    assert compact(sink, spark) == 1
-    m = sink.committed_compactions(0)[-1]
-    assert f".{os.getpid()}." in m["staging"], m["staging"]  # pid + thread id
-    gen = m["gen"]
-    live_rel = m["files"][0]
-    live = os.path.join(sink._ds_root(0), live_rel)
-    # double fault: marked file missing, marker's own staging leaked AND a
-    # same-gen loser staging present with DIVERGENT content
-    winner_staging = f"{sink.root}/_staging/{m['staging']}"
-    loser_staging = f"{sink.root}/_staging/compact-wiki-r0-{gen}.999999"
-    for staging in (winner_staging, loser_staging):
-        sdir = os.path.join(staging, os.path.dirname(live_rel))
-        os.makedirs(sdir, exist_ok=True)
-        sh.copyfile(live, os.path.join(sdir, "part-00000.snappy.parquet"))
-    # corrupt the loser's copy so a provenance mistake is detectable
-    with open(
-        os.path.join(
-            loser_staging, os.path.dirname(live_rel), "part-00000.snappy.parquet"
-        ),
-        "wb",
-    ) as fh:
-        fh.write(b"NOT A PARQUET FILE")
-    os.remove(live)
-    compact(sink, spark)
-    assert os.path.exists(live), "marked file not restored"
-    assert not os.path.isdir(winner_staging) and not os.path.isdir(loser_staging)
-    got = sorted(r.page for r in sink.read(spark, committed_only=True).collect())
-    assert got == ["p0", "p1"], "restored file content diverged (wrong provenance)"
 
 
 def test_read_paths_reject_out_of_range_replica(spark, tmp_path):

@@ -38,9 +38,10 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
+from tranquility_spark.server_main import build_sink
 from tranquility_spark.sources.kafka import kafka_stream, parse_kafka_batch
 from tranquility_spark.specs import parse_druid_spec
-from tranquility_spark.streaming.sink import MultiDatasourceSink, SegmentSink
+from tranquility_spark.streaming.sink import MultiDatasourceSink
 
 
 def build_sinks(config: dict) -> MultiDatasourceSink:
@@ -50,19 +51,10 @@ def build_sinks(config: dict) -> MultiDatasourceSink:
     the write — the full reference pipeline (Druid tasks aggregate at
     ingest), not just raw routing.
     """
-    root = config.get("sink", {}).get("root", "/tmp/tranquility_spark_segments")
     sinks, specs = {}, {}
     for ds_conf in config["dataSources"]:
         spec = parse_druid_spec(ds_conf["spec"])
-        tuning = ds_conf.get("tuning", {})
-        sinks[spec.datasource] = SegmentSink(
-            root,
-            spec.datasource,
-            segment_granularity=spec.granularity_spec.segment_granularity,
-            partitions=int(tuning.get("partitions", 1)),
-            replicants=int(tuning.get("replicants", 1)),
-            ts_col=spec.timestamp_spec.output,
-        )
+        sinks[spec.datasource] = build_sink(config, spec, ds_conf.get("tuning", {}))
         specs[spec.datasource] = spec
     return MultiDatasourceSink(sinks, specs=specs)
 

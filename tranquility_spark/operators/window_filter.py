@@ -28,6 +28,8 @@ def _parse_iso_duration_seconds(period: str) -> int:
     p = period.upper()
     if not p.startswith("PT"):
         raise ValueError(f"expected ISO duration like PT10M, got {period!r}")
+    if len(p) == 2:
+        raise ValueError(f"empty duration {period!r}")
     secs, num = 0, ""
     for ch in p[2:]:
         if ch.isdigit():
@@ -43,6 +45,9 @@ def _parse_iso_duration_seconds(period: str) -> int:
             num = ""
         else:
             raise ValueError(f"bad duration component {ch!r} in {period!r}")
+    if num:
+        # loud, not silently shortened: "PT10" would otherwise be 0 s
+        raise ValueError(f"number {num!r} without a unit in {period!r}")
     return secs
 
 

@@ -30,9 +30,21 @@ from typing import Optional
 from pyspark.sql import SparkSession
 
 from tranquility_spark.sources.http_server import IngestServer
-from tranquility_spark.specs import parse_druid_spec
+from tranquility_spark.specs import IngestSpec, parse_druid_spec
 from tranquility_spark.streaming.sink import SegmentSink
 from tranquility_spark.streaming.tranquilizer import Tranquilizer
+
+
+def build_sink(config: dict, spec: IngestSpec, tuning: dict) -> SegmentSink:
+    """One datasource's segment sink from the daemon config (both daemons)."""
+    return SegmentSink(
+        config.get("sink", {}).get("root", "/tmp/tranquility_spark_segments"),
+        spec.datasource,
+        segment_granularity=spec.granularity_spec.segment_granularity,
+        partitions=int(tuning.get("partitions", 1)),
+        replicants=int(tuning.get("replicants", 1)),
+        ts_col=spec.timestamp_spec.output,
+    )
 
 
 def build_server(config: dict, spark: Optional[SparkSession] = None) -> IngestServer:
@@ -42,25 +54,14 @@ def build_server(config: dict, spark: Optional[SparkSession] = None) -> IngestSe
 
         spark = get_spark("tranquility-spark-server")
 
-    sink_conf = config.get("sink", {})
-    root = sink_conf.get("root", "/tmp/tranquility_spark_segments")
-
     tranquilizers = {}
     for ds_conf in config["dataSources"]:
         spec = parse_druid_spec(ds_conf["spec"])
         tuning = ds_conf.get("tuning", {})
-        sink = SegmentSink(
-            root,
-            spec.datasource,
-            segment_granularity=spec.granularity_spec.segment_granularity,
-            partitions=int(tuning.get("partitions", 1)),
-            replicants=int(tuning.get("replicants", 1)),
-            ts_col=spec.timestamp_spec.output,
-        )
         tranquilizers[spec.datasource] = Tranquilizer(
             spark,
             spec,
-            sink,
+            build_sink(config, spec, tuning),
             max_batch_size=int(tuning.get("maxBatchSize", 2000)),
             window_period=tuning.get("windowPeriod", "PT10M"),
         )

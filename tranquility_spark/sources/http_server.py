@@ -31,33 +31,33 @@ def _parse_body(raw: bytes, content_type: str = "application/json") -> list[dict
     """JSON array, single object, or newline-delimited objects → list of
     events; a Smile body (``application/x-jackson-smile``) may carry one
     array value or back-to-back record values (the Jackson stream shape),
-    mirroring the JSON array/NDJSON duality."""
+    mirroring the JSON array/NDJSON duality. Every event must be an
+    object: anything else is a ``ValueError`` (a 400 before any event of
+    the body is sent), not a failed flush dropping the whole POST."""
     if "smile" in (content_type or "").lower():
         from tranquility_spark.operators.smile_codec import decode_stream
 
-        events: list[dict] = []
+        events: list = []
         for v in decode_stream(raw):
             if isinstance(v, list):
                 events.extend(v)
             else:
                 events.append(v)
-        for e in events:
-            if not isinstance(e, dict):
-                raise ValueError("Smile body must contain objects")
-        return events
-    text = raw.decode("utf-8").strip()
-    if not text:
-        return []
-    if text[0] == "[":
-        out = json.loads(text)
-        if not isinstance(out, list):
-            raise ValueError("expected JSON array")
-        return out
-    events = []
-    for line in text.splitlines():
-        line = line.strip()
-        if line:
-            events.append(json.loads(line))
+        kind = "Smile"
+    else:
+        text = raw.decode("utf-8").strip()
+        if not text:
+            return []
+        if text[0] == "[":
+            events = json.loads(text)
+            if not isinstance(events, list):
+                raise ValueError("expected JSON array")
+        else:
+            events = [json.loads(line) for line in text.splitlines() if line.strip()]
+        kind = "JSON"
+    for e in events:
+        if not isinstance(e, dict):
+            raise ValueError(f"{kind} body must contain objects, got {type(e).__name__}")
     return events
 
 

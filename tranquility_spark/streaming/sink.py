@@ -38,21 +38,29 @@ exclusive marker, so a crash at ANY point leaves a retry idempotent.
 ``write_batch`` and ``compact`` run the same core — ``_stage_with_spark``,
 ``_staged_files`` (the deterministic names), ``_link_or_copy`` (the
 publish), ``_footer_rows`` and ``_commit_marker`` — and differ only in
-policy: what a lost marker race means and what must be cleared or
-restored around the publish. The publish touches one file per (bucket,
-shard) per batch; on an object store it becomes a manifest/metadata
-commit, same shape.
+policy: what a lost marker race means and what must be cleared around
+the publish. The publish touches one file per (bucket, shard) per batch;
+on an object store it becomes a manifest/metadata commit, same shape.
+
+One writer at a time: a batch id and a replica's compaction generations
+each have one writer, enforced by a kernel ``flock`` on a lock file
+(``_batches/<ds>-<id>.lock``, ``_compactions/<ds>-r<replica>.lock``) held
+around the whole protocol. The kernel drops the lock when its holder
+dies, so a crashed writer never blocks a retry, and a second holder —
+another process, a sibling thread or the same thread — waits. Like the
+marker commit, the lock is for one host's filesystem.
 """
 
 from __future__ import annotations
 
+import contextlib
 import datetime as _dt
+import fcntl
 import itertools
 import json
 import os
 import re
 import shutil
-import threading
 import time as _time
 from typing import Callable, Optional, Sequence
 
@@ -148,6 +156,64 @@ def _commit_marker(path: str, payload: dict) -> bool:
     return True
 
 
+# -- the one-writer lock ---------------------------------------------------
+
+
+def _try_lock(path: str):
+    """The open lock file ``path`` holding an exclusive ``flock``, or None
+    while another holder has it.
+
+    flock belongs to the open file description, so a second open of the
+    path is refused inside this process too (a sibling thread, or the same
+    thread twice), and the kernel drops the lock when its holder dies: a
+    crashed holder's file is simply taken over. A releasing holder removes
+    the path before closing, so a file locked just after that no longer
+    names the path; the attempt then starts over on the path's new file.
+    """
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    while True:
+        fh = open(path, "a")
+        try:
+            fcntl.flock(fh, fcntl.LOCK_EX | fcntl.LOCK_NB)
+            if os.path.samestat(os.stat(path), os.fstat(fh.fileno())):
+                return fh
+        except BlockingIOError:
+            fh.close()
+            return None
+        except FileNotFoundError:
+            pass  # removed by its releasing holder after our open
+        except BaseException:
+            fh.close()
+            raise
+        fh.close()
+
+
+def _unlock(fh) -> None:
+    """Release a ``_try_lock`` lock: remove its path, then drop the flock."""
+    try:
+        os.remove(fh.name)
+    finally:
+        fh.close()
+
+
+@contextlib.contextmanager
+def _exclusive(path: str, what: str):
+    """Hold the lock ``path`` for the block, waiting up to 600 s for a live
+    holder to finish (a waiter never skips on a snapshot of who holds it)."""
+    deadline = _time.monotonic() + 600.0
+    while (fh := _try_lock(path)) is None:
+        if _time.monotonic() > deadline:
+            raise RuntimeError(
+                f"{what}: a live concurrent writer has held {path} for over "
+                "600s — refusing to silently skip the work"
+            )
+        _time.sleep(0.2)
+    try:
+        yield
+    finally:
+        _unlock(fh)
+
+
 class SegmentSink:
     def __init__(
         self,
@@ -216,108 +282,12 @@ class SegmentSink:
     def _marker_path(self, batch_id: int) -> str:
         return f"{self.root}/_batches/{self.datasource}-{batch_id}"
 
-    # process-local registry of batch locks currently HELD by live threads
-    # of this process: the pid recorded in the lock file cannot
-    # distinguish a sibling live thread from a leaked lock of a
-    # crashed prior attempt — without this set, two threads of one driver
-    # would classify each other's live locks as 'own pid == stale', steal
-    # them, and re-enable the sweep-deletes-winner's-files corruption the
-    # lock exists to prevent)
-    _held_locks: set = set()
-    _held_locks_mu = threading.Lock()
+    def _acquire_batch_lock(self, marker: str):
+        """The lock of the batch whose marker is ``marker`` if it is free
+        now, else None; ``_release_batch_lock`` releases it."""
+        return _try_lock(f"{marker}.lock")
 
-    def _acquire_batch_lock(self, marker: str) -> str | None:
-        """Exclusive in-progress lock for one batch id's write protocol.
-
-        ``write_batch`` sweeps every file its batch id
-        ever published BEFORE committing the marker — two live producers
-        racing the same id could both pass the top marker check, and the
-        loser's sweep would delete files the winner commits moments later
-        (with a wall-clock window the loser republishes FEWER buckets, then
-        loses the marker link and returns 0 — the winner's committed marker
-        left referencing deleted rows). Exclusivity must therefore be
-        acquired before ANY mutation, not at the marker commit.
-
-        Returns the lock path on success; ``None`` when a LIVE concurrent
-        producer holds the lock (the caller treats the batch as owned
-        elsewhere and returns 0 — the Tranquilizer surfaces that loudly).
-        A lock whose recorded pid is dead (crashed attempt) or is our own
-        pid (leaked by a killed thread in this process) is stale and is
-        stolen; pid-reuse misclassifying a stale lock as live only delays
-        a retry, never corrupts data.
-        """
-        lock = f"{marker}.lock"
-        os.makedirs(os.path.dirname(lock), exist_ok=True)
-        tmp = f"{lock}.tmp.{os.getpid()}.{threading.get_ident()}"
-        # write-then-link: the pid is fully written before the lock becomes
-        # visible, so a reader never sees a half-written holder pid
-        with open(tmp, "w") as fh:
-            fh.write(str(os.getpid()))
-        try:
-            # the class mutex serializes every same-process decision —
-            # link attempts, held-set membership, steals — so two sibling
-            # threads can never both conclude a lock is theirs to take
-            with SegmentSink._held_locks_mu:
-                if lock in SegmentSink._held_locks:
-                    return None  # held by a live thread of THIS process
-                while True:
-                    try:
-                        os.link(tmp, lock)
-                        SegmentSink._held_locks.add(lock)
-                        return lock
-                    except FileExistsError:
-                        try:
-                            with open(lock) as fh:
-                                holder = int(fh.read().strip() or "0")
-                        except (OSError, ValueError):
-                            holder = 0
-                        if holder == os.getpid():
-                            # our pid but not in the held set (checked
-                            # above, under the same mutex): a leaked lock
-                            # from a killed thread — stale, steal below
-                            pass
-                        elif holder:
-                            try:
-                                os.kill(holder, 0)
-                                return None  # live concurrent producer
-                            except ProcessLookupError:
-                                pass  # dead holder — stale, steal below
-                            except PermissionError:
-                                return None  # another uid's live process
-                        try:
-                            os.remove(lock)
-                        except FileNotFoundError:
-                            pass
-                        # loop: re-attempt the link; if a foreign stealer
-                        # won the race, the next iteration sees ITS pid
-                    except OSError:
-                        # filesystem without hardlinks: O_EXCL create
-                        # (atomic on local fs; accepts a tiny holder-pid
-                        # visibility window)
-                        try:
-                            fd = os.open(
-                                lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY
-                            )
-                        except FileExistsError:
-                            return None
-                        with os.fdopen(fd, "w") as fh:
-                            fh.write(str(os.getpid()))
-                        SegmentSink._held_locks.add(lock)
-                        return lock
-        finally:
-            try:
-                os.remove(tmp)
-            except FileNotFoundError:
-                pass
-
-    @staticmethod
-    def _release_batch_lock(lock: str) -> None:
-        with SegmentSink._held_locks_mu:
-            SegmentSink._held_locks.discard(lock)
-        try:
-            os.remove(lock)
-        except FileNotFoundError:
-            pass
+    _release_batch_lock = staticmethod(_unlock)
 
     def max_batch_id(self) -> int:
         """Highest committed batch id for this datasource (0 if none).
@@ -338,37 +308,16 @@ class SegmentSink:
         marker = self._marker_path(batch_id)
         if os.path.exists(marker):
             return 0
-        # exclusivity BEFORE the sweep: a live concurrent
-        # producer of the same batch id must not be able to delete files
-        # this run is about to commit. A blocked producer WAITS rather
-        # than skipping: returning 0 on a liveness
-        # snapshot would let this producer's checkpoint advance past a
-        # batch the lock holder then fails to commit — the batch would be
-        # lost with no error anywhere, where the pre-lock code survived
-        # any single crash. The loop exits only on (a) the marker
-        # appearing (holder committed — genuine replay, return 0), or
-        # (b) acquiring the lock ourselves (holder released or died —
-        # its sweep-and-stage protocol makes our retry safe).
-        deadline = _time.monotonic() + 600.0
-        while True:
-            lock = self._acquire_batch_lock(marker)
-            if lock is not None:
-                break
+        # one writer per batch id, taken BEFORE the sweep below: two live
+        # producers racing one id could both pass the marker check above,
+        # and the loser's sweep would delete files the winner is about to
+        # commit. A blocked producer waits for the holder instead of
+        # skipping: returning 0 while the holder may still fail would let
+        # this producer's checkpoint advance past a batch nobody commits.
+        with _exclusive(f"{marker}.lock", f"batch {batch_id}"):
             if os.path.exists(marker):
-                return 0  # the concurrent producer committed this batch
-            if _time.monotonic() > deadline:
-                raise RuntimeError(
-                    f"batch {batch_id}: a live concurrent producer has "
-                    "held the write lock for over 600s without "
-                    "committing — refusing to silently skip the batch"
-                )
-            _time.sleep(0.2)
-        try:
-            if os.path.exists(marker):
-                return 0  # committed while we acquired the lock
+                return 0  # the holder we waited for committed this batch
             return self._write_batch_locked(df, batch_id, marker)
-        finally:
-            self._release_batch_lock(lock)
 
     def _write_batch_locked(self, df: DataFrame, batch_id: int, marker: str) -> int:
         out = df
@@ -746,8 +695,8 @@ def compact(
        set;
     2. stage the rewrite to ``_staging`` via one Spark job, then publish the
        staged files into the live tree as ``compact-<gen>-<seq>.parquet``
-       (deterministic names: a retry overwrites its own partial publish;
-       stale leftovers of the same generation are cleared first). Readers
+       (deterministic names; the janitor below clears a crashed attempt's
+       leftovers of the same generation first). Readers
        ignore compact files with no committed marker, so the live tree's
        snapshot is untouched throughout;
     3. commit a ``_compactions/<ds>-r<replica>-<gen>`` marker (write + atomic
@@ -761,6 +710,12 @@ def compact(
        committed its marker), so a crash in the publish→marker window
        cannot leave the raw read double-counting forever — even when the
        retry takes the no-op early return.
+
+    Concurrent calls for one (datasource, replica) serialize: each holds
+    the ``_compactions/<ds>-r<replica>.lock`` flock for its whole run, so
+    a second call waits, then sees the first one's marker and compacts
+    whatever is still over target, instead of racing it for a generation's
+    marker. A leftover staging dir therefore always belongs to a dead run.
 
     A kill at ANY point leaves ``read(committed_only=True)`` exact (chaos-
     tested live in tests/test_streaming.py); the raw read can transiently
@@ -798,6 +753,12 @@ def compact(
     # namespace and the orphan janitor would delete committed compact files
     # as "unmarked" — silent data loss
     sink._check_replica(replica)
+    lock = f"{sink.root}/_compactions/{sink.datasource}-r{replica}.lock"
+    with _exclusive(lock, f"compaction of {sink.datasource} replica {replica}"):
+        return _compact_locked(sink, spark, replica, target_files_per_shard, before)
+
+
+def _compact_locked(sink, spark, replica, target_files_per_shard, before) -> int:
     base = sink._ds_root(replica)
     if not os.path.isdir(base):
         return 0
@@ -813,11 +774,10 @@ def compact(
     # Without this, the no-op early return below (or a retry with a larger
     # target) would leave them double-counted by the raw read forever; with
     # it, the raw read's old+new visibility really is transient. Snapshot
-    # reads never saw them either way.
-    # (a marked generation can also carry EXTRA files its marker does not
-    # list — a concurrent same-gen run that lost the marker race after
-    # publishing, see the exclusive-link commit below — those are equally
-    # invisible to the snapshot and equally removed here)
+    # reads never saw them either way. This also clears every leftover of
+    # the generation this run is about to publish, and the extras of a
+    # marked generation its marker does not list (a run that lost the
+    # marker race after publishing, see the commit below).
     marked_files = {m["gen"]: set(m["files"]) for m in committed}
     for dirpath, _dirs, fs in os.walk(base):
         for f in fs:
@@ -829,46 +789,17 @@ def compact(
                 rel = os.path.relpath(os.path.join(dirpath, f), base)
                 if g not in marked_files or rel not in marked_files[g]:
                     os.remove(os.path.join(dirpath, f))
-    # staging janitor: staging outlives the marker commit (it backs the
-    # post-commit repair pass below), so a crash in the marker→cleanup
-    # window leaks a past generation's staging dir forever (later runs use
-    # higher gens and never revisit the path). Clear staging dirs of
-    # generations <= the last committed one — and BEFORE deleting a MARKED
-    # generation's staging, restore any of its files a double fault left
-    # missing from the live tree (crash after marker but before the repair
-    # pass, with a concurrent janitor having removed the published copies —
-    # staging holds the only remaining bytes). Staging of a HIGHER gen may
-    # belong to a live concurrent run and is left alone.
+    # staging janitor: a run that died before removing its staging dir
+    # leaks it. Under the lock no other run of this replica is live, so
+    # every staging dir of this replica is such a leftover: "…-<gen>", or
+    # "…-<gen>.<pid>.<thread>" as older versions named it.
     stage_root = f"{sink.root}/_staging"
-    last_gen = committed[-1]["gen"] if committed else 0
     stage_prefix = f"compact-{sink.datasource}-r{replica}-"
-    # restore provenance: with pid-unique staging dirs a marked generation
-    # can have SEVERAL staging dirs on disk (the winner's plus same-gen
-    # losers'); only the one the marker itself names holds the exact file
-    # sequence the marker's counts were taken from. Legacy markers (no
-    # "staging" key) predate pid-suffixed dirs, so any dir of their
-    # generation is theirs.
-    marker_staging = {m["gen"]: m.get("staging") for m in committed}
     if os.path.isdir(stage_root):
-        for d in sorted(os.listdir(stage_root)):
-            if not d.startswith(stage_prefix):
-                continue
-            try:
-                # "…-<gen>" (legacy) or "…-<gen>.<pid>" (pid-unique)
-                g = int(d[len(stage_prefix):].split(".", 1)[0])
-            except ValueError:
-                continue
-            if g > last_gen:
-                # may belong to a live concurrent run racing for the next
-                # generation — left alone (it reaps itself on commit/abort)
-                continue
-            sdir = os.path.join(stage_root, d)
-            if g in marked_files and marker_staging.get(g) in (None, d):
-                for rel, src in _staged_files(sdir, f"compact-{g}"):
-                    dst = os.path.join(base, rel)
-                    if rel in marked_files[g] and not os.path.exists(dst):
-                        _link_or_copy(src, dst)
-            shutil.rmtree(sdir, ignore_errors=True)
+        for d in os.listdir(stage_root):
+            gen_part = d[len(stage_prefix):].split(".", 1)[0]
+            if d.startswith(stage_prefix) and gen_part.isdigit():
+                shutil.rmtree(os.path.join(stage_root, d))
     live = sink.committed_files(replica)
     if before is not None:
         # bucket-scoped maintenance: only files in g=<bucket> partitions
@@ -922,22 +853,7 @@ def compact(
                 f"cluster_by columns missing from layout being compacted: {missing}"
             )
     n_parts = df.select("g", "p").distinct().count()
-    # pid-unique staging: two concurrent same-generation compactors sharing
-    # one staging dir could rmtree each other mid-write or mid-publish-walk
-    # — the first run publishing a PARTIAL file set, still winning the
-    # marker link, then deleting the full replaced set (committed row
-    # loss). Each run stages privately; the janitor above reaps only
-    # stale generations and restores only from the dir the committed
-    # marker itself names.
-    staging = (
-        f"{sink.root}/_staging/compact-{sink.datasource}-r{replica}-{gen}"
-        f".{os.getpid()}.{threading.get_ident()}"
-    )
-    if os.path.isdir(staging):
-        # this (pid, thread)'s own crashed leftovers only — a live sibling
-        # thread has a distinct ident (pid alone would let two
-        # maintenance threads of one driver share a staging path)
-        shutil.rmtree(staging)
+    staging = f"{sink.root}/_staging/compact-{sink.datasource}-r{replica}-{gen}"
     # hash-repartition on (g, p [, slice]) keeps each output group WHOLE
     # in one task, so re-running on a compacted layout stays a no-op (a
     # range partitioner on the cluster key could straddle a bucket across
@@ -967,60 +883,30 @@ def compact(
     # compaction)
     _stage_with_spark(df, staging, sink.cluster_by)
     staged = _staged_files(staging, f"compact-{gen}")
-    # clear uncommitted leftovers of THIS generation: a crashed prior
-    # attempt may have published more seq files than this run will
-    for rel_dir in sorted({os.path.dirname(rel) for rel, _ in staged}):
-        dst_dir = os.path.join(base, rel_dir)
-        os.makedirs(dst_dir, exist_ok=True)
-        for stale in os.listdir(dst_dir):
-            if stale.startswith(f"compact-{gen}-") and stale.endswith(".parquet"):
-                os.remove(os.path.join(dst_dir, stale))
     for rel, src in staged:
         _link_or_copy(src, os.path.join(base, rel))
     rows = _footer_rows(src for _, src in staged)
-    # staging is NOT removed yet: a CONCURRENT compact's janitor can
-    # legally delete this run's published-but-unmarked files (they look
-    # exactly like a crashed predecessor's orphans); the staged inodes stay
-    # alive until after the marker commits so the repair pass below can
-    # restore anything the janitor took in that window.
+    shutil.rmtree(staging, ignore_errors=True)
 
     marker = f"{sink.root}/_compactions/{sink.datasource}-r{replica}-{gen}"
     replaced = [os.path.relpath(f, base) for f in live]
     payload = {
         "gen": gen, "replica": replica, "rows": rows,
         "files": [rel for rel, _ in staged], "replaced": replaced,
-        # the committing run's OWN staging dir (basename): the janitor's
-        # restore pass must link marked files only from here — a same-gen
-        # loser's staging may split rows into a different file sequence,
-        # and restoring a marked name from it would put divergent content
-        # behind the marker's counts
-        "staging": os.path.basename(staging),
     }
-    # the atomic flip. A run that loses the race for its generation aborts
-    # BEFORE its deletion phase: its published same-gen extras are
+    # the atomic flip. Every compact() of this replica holds the lock, so
+    # only a writer outside it can commit this generation first; this run
+    # then aborts BEFORE its deletion phase: its published extras are
     # invisible to the snapshot (not in the winner's file list) and the
     # next run's janitor removes them.
     if not _commit_marker(marker, payload):
-        shutil.rmtree(staging, ignore_errors=True)
         raise RuntimeError(
             f"concurrent compaction committed generation {gen} first; "
             "this run's work was discarded (no data was deleted)"
         )
 
-    # repair pass: if a concurrent run's janitor removed any of this
-    # generation's files during the publish→marker window (unmarked then,
-    # marked now), restore them from the still-live staging inodes BEFORE
-    # deleting the replaced originals — without this, the committed marker
-    # could reference deleted files while the only other copy of those
-    # rows (the replaced set) is removed below.
-    for rel, src in staged:
-        dst = os.path.join(base, rel)
-        if not os.path.exists(dst):
-            _link_or_copy(src, dst)
-
     for rel in replaced:
         stale = os.path.join(base, rel)
         if os.path.exists(stale):
             os.remove(stale)
-    shutil.rmtree(staging, ignore_errors=True)
     return n_parts
